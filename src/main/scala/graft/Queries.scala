@@ -74,6 +74,29 @@ object Queries {
     p
   }
 
+  /** Per-dataset harness path `<cacheRoot>/<tag>_<name>_<sf>`. */
+  private[graft] def harnessDir(tag: String, name: String,
+                                d: String): String =
+    s"$cacheRoot/${tag}_${name}_${new java.io.File(d).getName}"
+
+  /** The staging every file-source harness stream shares: wipe the
+    * output dirs in `wipe`, land `staged` under `harnessDir(tag, "src")`
+    * as `parts` files (0 keeps the frame's own partitioning; the
+    * streaming file source reads per file in parallel), and return
+    * (source dir, `staged.schema` for the stream reader, a fresh
+    * checkpoint slot). */
+  private[graft] def stageStream(tag: String, d: String, staged: DataFrame,
+                                 parts: Int = 4, format: String = "json",
+                                 wipe: Seq[String] = Nil)
+      : (String, org.apache.spark.sql.types.StructType, String) = {
+    wipe.foreach(p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+    val src = harnessDir(tag, "src", d)
+    (if (parts > 0) staged.repartition(parts) else staged)
+      .write.mode("overwrite").format(format).save(src)
+    (src, staged.schema, freshCheckpoint(tag, d))
+  }
+
   /** Shared driver for the incremental-pipeline queries: stage the
     * events table as JSON files, then run a bronze→silver INCREMENTAL
     * pipeline over them (3 files per trigger forces multiple
@@ -81,23 +104,13 @@ object Queries {
     * is batch-split-independent). */
   private def runIncPipeline(s: SparkSession, d: String,
                              tag: String): Pipeline.RunResult = {
-    import org.apache.spark.sql.types._
-    val sf = new java.io.File(d).getName
-    val src = s"$cacheRoot/${tag}_src_$sf"
-    val store = s"$cacheRoot/${tag}_store_$sf"
-    VersionedTable.destroy(store)
+    val store = harnessDir(tag, "store", d)
     // 6 files / 3-per-trigger → 2 micro-batches: enough to prove
     // batch-split independence without paying for extra merge commits
     // (each batch costs one versioned MERGE per stage)
-    Tables(s, d).events
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .repartition(6).write.mode("overwrite").json(src)
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", LongType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    val ckpt = freshCheckpoint(tag, d)
+    val (src, schema, ckpt) = stageStream(tag, d, Tables(s, d).events
+      .select("event_id", "ts", "user_id", "event_type", "value"),
+      parts = 6, wipe = Seq(store))
     val stages = Seq(
       Pipeline.Stage("bronze_events", identity,
         Seq(Expectation("user present", "user_id is not null"))),
@@ -918,19 +931,10 @@ object Queries {
       // MERGE, so the final table equals the one-shot batch chain and
       // the batch curation SQL is the oracle
       (s, d) => {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"$cacheRoot/cinc_src_$sf"
-        val store = s"$cacheRoot/cinc_store_$sf"
-        VersionedTable.destroy(store)
-        Tables(s, d).documents.select("doc_id", "text", "lang", "source")
-          .repartition(6).write.mode("overwrite").json(src)
-        val schema = StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("text", StringType),
-          StructField("lang", StringType),
-          StructField("source", StringType)))
-        val ckpt = freshCheckpoint("cinc", d)
+        val store = harnessDir("cinc", "store", d)
+        val (src, schema, ckpt) = stageStream("cinc", d, Tables(s, d)
+          .documents.select("doc_id", "text", "lang", "source"),
+          parts = 6, wipe = Seq(store))
         val stages = Seq(
           Pipeline.Stage("silver_scored", df => {
             val lang = TextAnalysis.langId(df)

@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
-import graft.Queries.{Q, withShufflePartitions, freshCheckpoint}
+import graft.streaming.Streams
+import graft.Queries.{Q, withShufflePartitions, freshCheckpoint,
+  harnessDir, stageStream}
 
 /** The streaming-harness half of the query registry: every `stream_*`
   * entry drives a real Structured Streaming query e2e (file/memory
@@ -14,6 +16,18 @@ import graft.Queries.{Q, withShufflePartitions, freshCheckpoint}
   * declarative entries. Ordering and semantics are unchanged:
   * `Queries.all` splices this sequence in. */
 private[graft] object StreamingQueries {
+
+  /** A harness stream still running after this long is stopped and
+    * fails its query ([[Streams.awaitDone]]). */
+  private val TimeoutMs = 120000L
+
+  /** Drain `in` into the in-memory table `name` and read it back. */
+  private def drainToMemory(in: DataFrame, name: String,
+                            ckpt: String): DataFrame = {
+    Streams.awaitDone(Streams.sinkRun(
+      in.writeStream.format("memory").queryName(name), ckpt), TimeoutMs)
+    in.sparkSession.table(name)
+  }
 
   def all: Seq[Q] = Seq(
     Q("stream_dedup_index",
@@ -26,25 +40,18 @@ private[graft] object StreamingQueries {
       // dominates each micro-batch and wants the full core count
       // (measured 8.2 s at 4 partitions vs 7.0 s at 32)
       (s, d) => {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/sdi_src_$sf"
-        val idx = s"${Queries.cacheRoot}/sdi_idx_$sf"
-        val prs = s"${Queries.cacheRoot}/sdi_pairs_$sf"
-        Seq(idx, prs).foreach(p =>
-          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+        val idx = harnessDir("sdi", "idx", d)
+        val prs = harnessDir("sdi", "pairs", d)
         // 4 files / 2-per-trigger → 2 micro-batches: the minimum that
         // proves batch-split independence (intra pairs in batch 0,
         // cross pairs vs the index in batch 1) — each extra batch
         // costs a full probe+append job set, all fixed overhead at
         // this scale
-        Tables(s, d).documents.select("doc_id", "text")
-          .repartition(4).write.mode("overwrite").json(src)
-        val schema = StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType)))
-        val ckpt = freshCheckpoint("sdi", d)
-        graft.streaming.Streams.indexedDedupStream(s, src, schema, idx, prs,
-          ckpt).awaitTermination(120000)
+        val (src, schema, ckpt) = stageStream("sdi", d,
+          Tables(s, d).documents.select("doc_id", "text"),
+          wipe = Seq(idx, prs))
+        Streams.awaitDone(Streams.indexedDedupStream(s, src, schema, idx,
+          prs, ckpt), TimeoutMs)
         s.read.parquet(prs).select("id_a", "id_b", "est_jaccard").distinct()
       },
       Some(TextOracleSql.estPairsSql(shingleK = 3, numPerm = 64,
@@ -57,18 +64,11 @@ private[graft] object StreamingQueries {
       // output makes the sink batch-split independent — checked by the
       // plain batch DISTINCT oracle
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/scur_src_$sf"
-        val out = s"${Queries.cacheRoot}/scur_out_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-        Tables(s, d).documents.select("doc_id", "text")
-          .repartition(4).write.mode("overwrite").json(src)
-        val schema = StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType)))
-        val ckpt = freshCheckpoint("scur", d)
-        graft.streaming.Streams.curationStream(s, src, schema, out, ckpt)
-          .awaitTermination(120000)
+        val out = harnessDir("scur", "out", d)
+        val (src, schema, ckpt) = stageStream("scur", d,
+          Tables(s, d).documents.select("doc_id", "text"), wipe = Seq(out))
+        Streams.awaitDone(Streams.curationStream(s, src, schema, out, ckpt),
+          TimeoutMs)
         s.read.parquet(out).select("text_hash", "n_tokens", "clf_score")
       },
       Some(InlineOracles.stream_curation)),
@@ -81,19 +81,12 @@ private[graft] object StreamingQueries {
       // counts however arrivals were batched — checked by the same
       // exact word-count oracle as batch heavy_hitters
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/shh_src_$sf"
-        val cnt = s"${Queries.cacheRoot}/shh_cnt_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(cnt))
-        Tables(s, d).documents.select("doc_id", "text")
-          .repartition(4).write.mode("overwrite").json(src)
-        val schema = StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType)))
-        val ckpt = freshCheckpoint("shh", d)
-        graft.streaming.Streams.tokenCountStream(s, src, schema, cnt, ckpt)
-          .awaitTermination(120000)
-        graft.streaming.Streams.heavyHittersFromCounts(s, cnt,
+        val cnt = harnessDir("shh", "cnt", d)
+        val (src, schema, ckpt) = stageStream("shh", d,
+          Tables(s, d).documents.select("doc_id", "text"), wipe = Seq(cnt))
+        Streams.awaitDone(Streams.tokenCountStream(s, src, schema, cnt,
+          ckpt), TimeoutMs)
+        Streams.heavyHittersFromCounts(s, cnt,
           minCount = 500)
       },
       Some("""
@@ -109,22 +102,13 @@ private[graft] object StreamingQueries {
       // the merged shards equal the exact whole-table profile however
       // arrivals were batched — the batch profile SQL is the oracle
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/spf_src_$sf"
-        val prf = s"${Queries.cacheRoot}/spf_prof_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(prf))
-        Tables(s, d).events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .repartition(4).write.mode("overwrite").json(src)
-        val schema = StructType(Seq(StructField("event_id", LongType),
-          StructField("ts", LongType), StructField("user_id", LongType),
-          StructField("event_type", StringType),
-          StructField("value", DoubleType)))
-        val ckpt = freshCheckpoint("spf", d)
-        graft.streaming.Streams.profileStream(s, src, schema, prf, ckpt)
-          .awaitTermination(120000)
-        graft.streaming.Streams.profileFromShards(s, prf)
+        val prf = harnessDir("spf", "prof", d)
+        val (src, schema, ckpt) = stageStream("spf", d, Tables(s, d).events
+          .select("event_id", "ts", "user_id", "event_type", "value"),
+          wipe = Seq(prf))
+        Streams.awaitDone(Streams.profileStream(s, src, schema, prf, ckpt),
+          TimeoutMs)
+        Streams.profileFromShards(s, prf)
       },
       Some(InlineOracles.stream_profile)),
 
@@ -137,24 +121,17 @@ private[graft] object StreamingQueries {
       // one-shot batch probe — the ann_ivf oracle checks the whole
       // streaming lifecycle
       (s, d) => {
-        import org.apache.spark.sql.types._
         val emb = Tables(s, d).embeddings
-        val sf = new java.io.File(d).getName
-        val idx = s"${Queries.cacheRoot}/ivfidx_$sf"
+        val idx =
+          s"${Queries.cacheRoot}/ivfidx_${new java.io.File(d).getName}"
         Similarity.buildIvfIndex(emb, idx, cacheKey = Some(d))
-        val src = s"${Queries.cacheRoot}/sap_src_$sf"
-        val out = s"${Queries.cacheRoot}/sap_out_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(out))
+        val out = harnessDir("sap", "out", d)
         // 4 files / 2-per-trigger → 2 micro-batches of 8 queries each
-        emb.filter(col("vec_id") < 16).select("vec_id", "embedding")
-          .repartition(4).write.mode("overwrite").parquet(src)
-        val schema = StructType(Seq(
-          StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType))))
-        val ckpt = freshCheckpoint("sap", d)
-        graft.streaming.Streams.annProbeStream(s, src, schema, idx, out,
-          ckpt).awaitTermination(120000)
+        val (src, schema, ckpt) = stageStream("sap", d,
+          emb.filter(col("vec_id") < 16).select("vec_id", "embedding"),
+          format = "parquet", wipe = Seq(out))
+        Streams.awaitDone(Streams.annProbeStream(s, src, schema, idx, out,
+          ckpt), TimeoutMs)
         s.read.parquet(out)
           .select("query_id", "neighbor_id", "cluster", "rank", "cosine")
       },
@@ -170,27 +147,19 @@ private[graft] object StreamingQueries {
       // one-shot batch as-of on ANY arrival split (batch=N overwrite
       // → retry-idempotent); the batch asof_join SQL is the oracle
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/sas_src_$sf"
-        val out = s"${Queries.cacheRoot}/sas_out_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+        val out = harnessDir("sas", "out", d)
         val ev = Tables(s, d).events
-        ev.filter(col("event_type") === "click")
-          .select("event_id", "user_id", "ts", "value")
-          .repartition(6).write.mode("overwrite").json(src)
+        val (src, schema, ckpt) = stageStream("sas", d,
+          ev.filter(col("event_type") === "click")
+            .select("event_id", "user_id", "ts", "value"),
+          parts = 6, wipe = Seq(out))
         val purchases = ev.filter(col("event_type") === "purchase")
           .groupBy(col("user_id"), col("ts"))
           .agg(max(col("event_id")).as("event_id"),
             max(col("value")).as("value"))
-        val schema = StructType(Seq(StructField("event_id", LongType),
-          StructField("user_id", LongType), StructField("ts", LongType),
-          StructField("value", DoubleType)))
-        val ckpt = freshCheckpoint("sas", d)
-        graft.streaming.Streams.asofEnrichStream(s, src, schema,
+        Streams.awaitDone(Streams.asofEnrichStream(s, src, schema,
           purchases, out, ckpt, key = "user_id", tsCol = "ts",
-          rightCols = Seq("event_id", "value"))
-          .awaitTermination(120000)
+          rightCols = Seq("event_id", "value")), TimeoutMs)
         s.read.parquet(out).drop("batch")
       },
       Some(InlineOracles.asof_join)),
@@ -204,20 +173,13 @@ private[graft] object StreamingQueries {
       // store re-derives the one-shot matrix on ANY batch split, so
       // the batch covariance SQL is the oracle
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/scv_src_$sf"
-        val cd = s"${Queries.cacheRoot}/scv_cov_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(cd))
-        Tables(s, d).embeddings.select("vec_id", "embedding")
-          .repartition(4).write.mode("overwrite").parquet(src)
-        val schema = StructType(Seq(StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType))))
-        val ckpt = freshCheckpoint("scv", d)
-        graft.streaming.Streams.covarianceStream(s, src, schema, cd,
-          ckpt).awaitTermination(120000)
-        Queries.pubDec38AsString(
-          graft.streaming.Streams.covarianceFromShards(s, cd))
+        val cd = harnessDir("scv", "cov", d)
+        val (src, schema, ckpt) = stageStream("scv", d,
+          Tables(s, d).embeddings.select("vec_id", "embedding"),
+          format = "parquet", wipe = Seq(cd))
+        Streams.awaitDone(Streams.covarianceStream(s, src, schema, cd,
+          ckpt), TimeoutMs)
+        Queries.pubDec38AsString(Streams.covarianceFromShards(s, cd))
       },
       Some(AnnOracleSql.covarianceSql())),
 
@@ -229,21 +191,15 @@ private[graft] object StreamingQueries {
       // accumulated store equals the one-shot audit on any batch
       // split — the batch cellStats SQL is the oracle
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/scs_src_$sf"
-        val cnt = s"${Queries.cacheRoot}/scs_counts_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(cnt))
+        val cnt = harnessDir("scs", "counts", d)
         val emb = Tables(s, d).embeddings
         val cents = Similarity.trainCentroids(emb, cacheKey = Some(d))
-        emb.select("vec_id", "embedding")
-          .repartition(4).write.mode("overwrite").parquet(src)
-        val schema = StructType(Seq(StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType))))
-        val ckpt = freshCheckpoint("scs", d)
-        graft.streaming.Streams.cellStatsStream(s, src, schema, cents,
-          cnt, ckpt).awaitTermination(120000)
-        graft.streaming.Streams.cellStatsFromShards(s, cnt, nlist = 16)
+        val (src, schema, ckpt) = stageStream("scs", d,
+          emb.select("vec_id", "embedding"), format = "parquet",
+          wipe = Seq(cnt))
+        Streams.awaitDone(Streams.cellStatsStream(s, src, schema, cents,
+          cnt, ckpt), TimeoutMs)
+        Streams.cellStatsFromShards(s, cnt, nlist = 16)
       },
       Some(AnnOracleSql.cellStatsSql(nlist = 16, iters = 3,
         sampleBudget = 128))),
@@ -256,21 +212,14 @@ private[graft] object StreamingQueries {
       // one-shot sketch on ANY batch split — the batch
       // sketch_countmin SQL is the oracle
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/scm_src_$sf"
-        val store = s"${Queries.cacheRoot}/scm_store_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
-        Tables(s, d).documents.select("doc_id", "text")
-          .repartition(4).write.mode("overwrite").json(src)
-        val schema = StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType)))
-        val ckpt = freshCheckpoint("scm", d)
+        val store = harnessDir("scm", "store", d)
+        val (src, schema, ckpt) = stageStream("scm", d,
+          Tables(s, d).documents.select("doc_id", "text"),
+          wipe = Seq(store))
         val probes = Seq("the", "table", "spark", "value", "zzzmissing")
-        graft.streaming.Streams.countMinStream(s, src, schema, store,
-          ckpt, width = 64, depth = 4, probes = probes)
-          .awaitTermination(120000)
-        graft.streaming.Streams.countMinFromShards(s, store, width = 64,
+        Streams.awaitDone(Streams.countMinStream(s, src, schema, store,
+          ckpt, width = 64, depth = 4, probes = probes), TimeoutMs)
+        Streams.countMinFromShards(s, store, width = 64,
           depth = 4, probes = probes)
       },
       Some(InlineOracles.sketch_countmin)),
@@ -283,20 +232,13 @@ private[graft] object StreamingQueries {
       // bit-for-bit on any arrival split — that batch derivation is
       // the oracle
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/sov_src_$sf"
-        val sg = s"${Queries.cacheRoot}/sov_sig_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(sg))
-        Tables(s, d).documents.select("doc_id", "text", "source")
-          .repartition(4).write.mode("overwrite").json(src)
-        val schema = StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType),
-          StructField("source", StringType)))
-        val ckpt = freshCheckpoint("sov", d)
-        graft.streaming.Streams.kminStream(s, src, schema, sg, 128,
-          ckpt).awaitTermination(120000)
-        graft.streaming.Streams.overlapFromShards(s, sg, 128)
+        val sg = harnessDir("sov", "sig", d)
+        val (src, schema, ckpt) = stageStream("sov", d,
+          Tables(s, d).documents.select("doc_id", "text", "source"),
+          wipe = Seq(sg))
+        Streams.awaitDone(Streams.kminStream(s, src, schema, sg, 128,
+          ckpt), TimeoutMs)
+        Streams.overlapFromShards(s, sg, 128)
       },
       Some(TextOracleSql.kmvOverlapSql(k = 128))),
 
@@ -308,22 +250,13 @@ private[graft] object StreamingQueries {
       // trajectory is readable mid-ingest from the tiny store — the
       // one-shot batch metrics SQL is the oracle on ANY arrival split
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/sxp_src_$sf"
-        val md = s"${Queries.cacheRoot}/sxp_met_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(md))
-        Tables(s, d).events
-          .select("event_id", "event_type", "value", "user_id")
-          .repartition(4).write.mode("overwrite").json(src)
-        val schema = StructType(Seq(StructField("event_id", LongType),
-          StructField("event_type", StringType),
-          StructField("value", DoubleType),
-          StructField("user_id", LongType)))
-        val ckpt = freshCheckpoint("sxp", d)
-        graft.streaming.Streams.expectationsStream(s, src, schema, md,
-          Expectations.EventSuite, ckpt).awaitTermination(120000)
-        graft.streaming.Streams.expectationsFromShards(s, md)
+        val md = harnessDir("sxp", "met", d)
+        val (src, schema, ckpt) = stageStream("sxp", d, Tables(s, d).events
+          .select("event_id", "event_type", "value", "user_id"),
+          wipe = Seq(md))
+        Streams.awaitDone(Streams.expectationsStream(s, src, schema, md,
+          Expectations.EventSuite, ckpt), TimeoutMs)
+        Streams.expectationsFromShards(s, md)
       },
       Some(InlineOracles.expectations_metrics)),
 
@@ -334,50 +267,31 @@ private[graft] object StreamingQueries {
       // frozen dims make the counters associative, so the merged
       // store equals the one-shot fact-side audit on ANY batch split
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
         val t = Tables(s, d)
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/sri_src_$sf"
-        val rd = s"${Queries.cacheRoot}/sri_cnt_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(rd))
-        t.lineitem.select("l_orderkey", "l_partkey", "l_suppkey")
-          .repartition(4).write.mode("overwrite").json(src)
-        val schema = StructType(Seq(
-          StructField("l_orderkey", LongType),
-          StructField("l_partkey", LongType),
-          StructField("l_suppkey", LongType)))
+        val rd = harnessDir("sri", "cnt", d)
+        val (src, schema, ckpt) = stageStream("sri", d,
+          t.lineitem.select("l_orderkey", "l_partkey", "l_suppkey"),
+          wipe = Seq(rd))
         val rels = Seq(
           ("lineitem_orders", "l_orderkey", t.orders, "o_orderkey"),
           ("lineitem_part", "l_partkey", t.part, "p_partkey"),
           ("lineitem_supplier", "l_suppkey", t.supplier, "s_suppkey"))
-        val ckpt = freshCheckpoint("sri", d)
-        graft.streaming.Streams.refIntegrityStream(s, src, schema, rd,
-          rels, ckpt).awaitTermination(120000)
-        graft.streaming.Streams.refIntegrityFromShards(s, rd)
+        Streams.awaitDone(Streams.refIntegrityStream(s, src, schema, rd,
+          rels, ckpt), TimeoutMs)
+        Streams.refIntegrityFromShards(s, rd)
       },
       Some(InlineOracles.stream_ref_integrity)),
 
     Q("stream_ingest_batch",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        import org.apache.spark.sql.types._
-        val src = s"${Queries.cacheRoot}/stream_src_${new java.io.File(d).getName}"
         // natural partitioning for the staging write — the streaming
         // file source reads per-file in parallel, so don't cap it
-        Tables(s, d).events
-          .select("event_id", "user_id", "event_type", "value")
-          .write.mode("overwrite").json(src)
-        val schema = StructType(Seq(
-          StructField("event_id", LongType), StructField("user_id", LongType),
-          StructField("event_type", StringType),
-          StructField("value", DoubleType)))
-        val ckpt = freshCheckpoint("stream", d)
-        val q = graft.streaming.Streams.fileIngest(s, src, schema)
-          .writeStream.format("memory").queryName("graft_stream_ingest")
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination(120000)
-        s.table("graft_stream_ingest")
+        val (src, schema, ckpt) = stageStream("stream", d,
+          Tables(s, d).events
+            .select("event_id", "user_id", "event_type", "value"),
+          parts = 0)
+        drainToMemory(Streams.fileIngest(s, src, schema),
+            "graft_stream_ingest", ckpt)
           .select("event_id", "user_id", "event_type", "value")
       },
       // the stream is exactly the staged events subset — an e2e
@@ -394,32 +308,17 @@ private[graft] object StreamingQueries {
       // sink = exactly one copy of everything staged, independent of
       // the run/batch split
       (s, d) => withShufflePartitions(s, 8) {
-        import org.apache.spark.sql.streaming.Trigger
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/sfi_src_$sf"
-        val out = s"${Queries.cacheRoot}/sfi_out_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(src))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+        val out = harnessDir("sfi", "out", d)
         val ev = Tables(s, d).events
           .select("event_id", "ts", "user_id", "event_type", "value")
-        ev.filter(col("event_id") % 4 =!= 0).repartition(6)
-          .write.mode("overwrite").json(src)
-        val schema = StructType(Seq(
-          StructField("event_id", LongType), StructField("ts", LongType),
-          StructField("user_id", LongType),
-          StructField("event_type", StringType),
-          StructField("value", DoubleType)))
-        val ckpt = freshCheckpoint("sfi", d)
-        def runOnce(): Unit = {
-          val q = graft.streaming.Streams.fileIngest(s, src, schema,
-              maxFilesPerTrigger = 3)
+        val (src, schema, ckpt) = stageStream("sfi", d,
+          ev.filter(col("event_id") % 4 =!= 0), parts = 6, wipe = Seq(out))
+        def runOnce(): Unit =
+          Streams.awaitDone(Streams.sinkRun(Streams.fileIngest(s, src,
+              schema, maxFilesPerTrigger = 3)
             .select("event_id", "ts", "user_id", "event_type", "value")
-            .writeStream.format("parquet").option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination(120000); ()
-        }
+            .writeStream.format("parquet").option("path", out), ckpt),
+            TimeoutMs)
         runOnce()
         // late arrivals land while the stream is down; the restart
         // resumes from the checkpoint and picks up only these files
@@ -442,26 +341,15 @@ private[graft] object StreamingQueries {
       // is exactly-once (batch-id markers) and layout-invariant, so
       // one copy of everything staged is the oracle
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/sav_src_$sf"
-        val table = s"${Queries.cacheRoot}/sav_table_$sf"
-        VersionedTable.destroy(table)
-        Tables(s, d).events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .repartition(8)
-          .write.mode("overwrite").json(src)
-        val schema = StructType(Seq(
-          StructField("event_id", LongType), StructField("ts", LongType),
-          StructField("user_id", LongType),
-          StructField("event_type", StringType),
-          StructField("value", DoubleType)))
-        val ckpt = freshCheckpoint("sav", d)
-        graft.streaming.Streams.appendStream(s, src, schema, table,
+        val table = harnessDir("sav", "table", d)
+        val (src, schema, ckpt) = stageStream("sav", d, Tables(s, d).events
+          .select("event_id", "ts", "user_id", "event_type", "value"),
+          parts = 8, wipe = Seq(table))
+        Streams.awaitDone(Streams.appendStream(s, src, schema, table,
           checkpoint = ckpt,
           payloadCols = Seq("event_id", "ts", "user_id", "event_type",
             "value"),
-          maxFilesPerTrigger = 3).awaitTermination(120000)
+          maxFilesPerTrigger = 3), TimeoutMs)
         val sizes = VersionedTable.manifestSizes(table,
           VersionedTable.latestVersion(table).get).map(_._2)
         VersionedTable.optimizeIncremental(s, table, Seq("event_id"),
@@ -474,30 +362,18 @@ private[graft] object StreamingQueries {
 
     Q("stream_merge_versioned",
       (s, d) => withShufflePartitions(s, 8) {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/smv_src_$sf"
-        val table = s"${Queries.cacheRoot}/smv_table_$sf"
-        VersionedTable.destroy(table)
+        val table = harnessDir("smv", "table", d)
         // stage as several files; 3-files-per-trigger forces multiple
         // MERGE micro-batches — the recency-aware merge makes the
         // final table independent of the batch split
-        Tables(s, d).events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .repartition(8)
-          .write.mode("overwrite").json(src)
-        val schema = StructType(Seq(
-          StructField("event_id", LongType), StructField("ts", LongType),
-          StructField("user_id", LongType),
-          StructField("event_type", StringType),
-          StructField("value", DoubleType)))
-        val ckpt = freshCheckpoint("smv", d)
-        val q = graft.streaming.Streams.mergeStream(s, src, schema, table,
+        val (src, schema, ckpt) = stageStream("smv", d, Tables(s, d).events
+          .select("event_id", "ts", "user_id", "event_type", "value"),
+          parts = 8, wipe = Seq(table))
+        Streams.awaitDone(Streams.mergeStream(s, src, schema, table,
           key = "user_id", orderCol = "ts", tieBreaker = "event_id",
           checkpoint = ckpt,
           payloadCols = Seq("event_id", "ts", "user_id", "event_type", "value"),
-          maxFilesPerTrigger = 3)
-        q.awaitTermination(120000)
+          maxFilesPerTrigger = 3), TimeoutMs)
         VersionedTable.read(s, table)
       },
       // final table = latest event per user over everything staged,
@@ -523,9 +399,8 @@ private[graft] object StreamingQueries {
       // operation markers make at-least-once application idempotent.
       // A 100 TB replica follows by shipping deltas, never snapshots
       (s, d) => withShufflePartitions(s, 8) {
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/cdfs_src_$sf"
-        val rep = s"${Queries.cacheRoot}/cdfs_rep_$sf"
+        val src = harnessDir("cdfs", "src", d)
+        val rep = harnessDir("cdfs", "rep", d)
         Seq(src, rep).foreach(VersionedTable.destroy)
         val cust = Tables(s, d).customer
           .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
@@ -540,11 +415,9 @@ private[graft] object StreamingQueries {
           Seq("c_acctbal" -> "c_acctbal + 100.0"))           // v2
         VersionedTable.deleteVectors(s, src, "c_acctbal < 0") // v3
         val ckpt = freshCheckpoint("cdfs", d)
-        def follow(): Unit = {
-          val q = graft.streaming.Streams.cdfSourceFollow(s, src, rep,
-            Seq("c_custkey"), ckpt)
-          q.awaitTermination(120000); ()
-        }
+        def follow(): Unit =
+          Streams.awaitDone(Streams.cdfSourceFollow(s, src, rep,
+            Seq("c_custkey"), ckpt), TimeoutMs)
         follow()
         // a commit lands while the follower is DOWN; the restarted
         // stream resumes from the checkpoint and applies only v4
@@ -569,29 +442,15 @@ private[graft] object StreamingQueries {
 
     Q("stream_dedup",
       (s, d) => withShufflePartitions(s, 8) {
-        import org.apache.spark.sql.streaming.Trigger
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/sdd_src_$sf"
         // stage every event TWICE (an at-least-once delivery) in 8
         // files — the watermark-bounded dedup must emit each exactly once
         val ev = Tables(s, d).events
           .select("event_id", "ts", "user_id", "event_type", "value")
-        ev.unionAll(ev).repartition(8).write.mode("overwrite").json(src)
-        val schema = StructType(Seq(
-          StructField("event_id", LongType), StructField("ts", LongType),
-          StructField("user_id", LongType),
-          StructField("event_type", StringType),
-          StructField("value", DoubleType)))
-        val ckpt = freshCheckpoint("sdd", d)
-        val q = graft.streaming.Streams.dedupStream(
-          graft.streaming.Streams.fileIngest(s, src, schema)
-            .select("event_id", "ts", "user_id", "event_type", "value"))
-          .writeStream.format("memory").queryName("graft_stream_dedup")
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination(120000)
-        s.table("graft_stream_dedup")
+        val (src, schema, ckpt) = stageStream("sdd", d, ev.unionAll(ev),
+          parts = 8)
+        drainToMemory(Streams.dedupStream(Streams.fileIngest(s, src, schema)
+            .select("event_id", "ts", "user_id", "event_type", "value")),
+          "graft_stream_dedup", ckpt)
       },
       // doubled input collapses back to exactly the source events
       Some(s"""
@@ -600,35 +459,21 @@ private[graft] object StreamingQueries {
 
     Q("stream_attribution",
       (s, d) => withShufflePartitions(s, 8) {
-        import org.apache.spark.sql.streaming.Trigger
-        import org.apache.spark.sql.types._
         // the stream-stream interval join e2e: clicks and purchases
         // read as TWO streams over the same staged files, joined on
         // user within the preceding 30-minute window, watermarks
         // bounding state on both sides. Inner-join matches emit
         // eagerly, so AvailableNow drains every pair.
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/sattr_src_$sf"
-        Tables(s, d).events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .repartition(6).write.mode("overwrite").json(src)
-        val schema = StructType(Seq(
-          StructField("event_id", LongType), StructField("ts", LongType),
-          StructField("user_id", LongType),
-          StructField("event_type", StringType),
-          StructField("value", DoubleType)))
-        val clicks = graft.streaming.Streams.fileIngest(s, src, schema)
+        val (src, schema, ckpt) = stageStream("sattr", d, Tables(s, d).events
+          .select("event_id", "ts", "user_id", "event_type", "value"),
+          parts = 6)
+        val clicks = Streams.fileIngest(s, src, schema)
           .filter(col("event_type") === "click")
-        val purchases = graft.streaming.Streams.fileIngest(s, src, schema)
+        val purchases = Streams.fileIngest(s, src, schema)
           .filter(col("event_type") === "purchase")
-        val ckpt = freshCheckpoint("sattr", d)
-        val q = graft.streaming.Streams
-          .attributionPairsStream(clicks, purchases, windowUs = 1800000000L)
-          .writeStream.format("memory").queryName("graft_stream_attr")
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination(120000)
-        s.table("graft_stream_attr")
+        drainToMemory(Streams
+          .attributionPairsStream(clicks, purchases, windowUs = 1800000000L),
+          "graft_stream_attr", ckpt)
       },
       // every (purchase, same-user click within the preceding 30 min)
       // pair, exactly once
@@ -643,8 +488,6 @@ private[graft] object StreamingQueries {
 
     Q("stream_join_outer",
       (s, d) => withShufflePartitions(s, 8) {
-        import org.apache.spark.sql.streaming.Trigger
-        import org.apache.spark.sql.types._
         // the LEFT-OUTER stream-stream join e2e: inner pairs emit
         // eagerly, but a zero-click purchase emits its null row only
         // when the click-side watermark passes its event time — a
@@ -656,34 +499,22 @@ private[graft] object StreamingQueries {
         // watermark OVER the real data and drop it as late), and the
         // no-data batch that follows flushes every surviving outer
         // row. Sentinels filter out of the result by user sign.
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/sjo_src_$sf"
         val ev = Tables(s, d).events
           .select("event_id", "ts", "user_id", "event_type", "value")
-        ev.repartition(6).write.mode("overwrite").json(src)
+        val (src, schema, ckpt) = stageStream("sjo", d, ev, parts = 6)
         val maxTs = ev.agg(max(col("ts"))).head.getLong(0)
         import s.implicits._
         Seq((-1L, maxTs + 36000000000L, -1L, "click", 0.0),
             (-2L, maxTs + 36000000000L, -1L, "purchase", 0.0))
           .toDF("event_id", "ts", "user_id", "event_type", "value")
           .coalesce(1).write.mode("append").json(src)
-        val schema = StructType(Seq(
-          StructField("event_id", LongType), StructField("ts", LongType),
-          StructField("user_id", LongType),
-          StructField("event_type", StringType),
-          StructField("value", DoubleType)))
-        def side(t: String) = graft.streaming.Streams
+        def side(t: String) = Streams
           .fileIngest(s, src, schema, maxFilesPerTrigger = 3)
           .filter(col("event_type") === t)
-        val ckpt = freshCheckpoint("sjo", d)
-        val q = graft.streaming.Streams
+        drainToMemory(Streams
           .attributionOuterStream(side("click"), side("purchase"),
-            windowUs = 1800000000L)
-          .writeStream.format("memory").queryName("graft_stream_jo")
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination(120000)
-        s.table("graft_stream_jo").filter(col("user_id") >= 0)
+            windowUs = 1800000000L), "graft_stream_jo", ckpt)
+          .filter(col("user_id") >= 0)
       },
       // the batch left join: every purchase exactly once per matching
       // click, or once with a null click if none in the window
@@ -705,11 +536,7 @@ private[graft] object StreamingQueries {
       // aggregate — which is the oracle. The sentinel's own window
       // stays open and is filtered by type
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/swa_src_$sf"
-        val out = s"${Queries.cacheRoot}/swa_out_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+        val out = harnessDir("swa", "out", d)
         val ev = Tables(s, d).events
           .select("event_id", "ts", "user_id", "event_type", "value",
             "props")
@@ -719,16 +546,10 @@ private[graft] object StreamingQueries {
           lit(sentinelTs).as("ts"), lit(-1L).as("user_id"),
           lit("sentinel").as("event_type"), lit(0.0).as("value"),
           lit("{}").as("props"))
-        ev.unionByName(sentinel).repartition(4)
-          .write.mode("overwrite").json(src)
-        val schema = StructType(Seq(StructField("event_id", LongType),
-          StructField("ts", LongType), StructField("user_id", LongType),
-          StructField("event_type", StringType),
-          StructField("value", DoubleType),
-          StructField("props", StringType)))
-        val ckpt = freshCheckpoint("swa", d)
-        graft.streaming.Streams.windowAggFileStream(s, src, schema, out,
-          ckpt).awaitTermination(120000)
+        val (src, schema, ckpt) = stageStream("swa", d,
+          ev.unionByName(sentinel), wipe = Seq(out))
+        Streams.awaitDone(Streams.windowAggFileStream(s, src, schema, out,
+          ckpt), TimeoutMs)
         s.read.parquet(out).filter(col("event_type") =!= "sentinel")
       },
       Some("""
@@ -746,12 +567,8 @@ private[graft] object StreamingQueries {
       // analog — the oracle; sentinel sessions stay open and are
       // never emitted
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
         val gap = 1800000000L
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/ssz_src_$sf"
-        val out = s"${Queries.cacheRoot}/ssz_out_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+        val out = harnessDir("ssz", "out", d)
         val ev = Tables(s, d).events
           .select("event_id", "ts", "user_id", "event_type", "value",
             "props")
@@ -762,16 +579,10 @@ private[graft] object StreamingQueries {
             lit(sentinelTs).as("ts"), col("user_id"),
             lit("sentinel").as("event_type"), lit(0.0).as("value"),
             lit("{}").as("props"))
-        ev.unionByName(sentinels).repartition(4)
-          .write.mode("overwrite").json(src)
-        val schema = StructType(Seq(StructField("event_id", LongType),
-          StructField("ts", LongType), StructField("user_id", LongType),
-          StructField("event_type", StringType),
-          StructField("value", DoubleType),
-          StructField("props", StringType)))
-        val ckpt = freshCheckpoint("ssz", d)
-        graft.streaming.Streams.sessionizeFileStream(s, src, schema, out,
-          ckpt, gap).awaitTermination(120000)
+        val (src, schema, ckpt) = stageStream("ssz", d,
+          ev.unionByName(sentinels), wipe = Seq(out))
+        Streams.awaitDone(Streams.sessionizeFileStream(s, src, schema, out,
+          ckpt, gap), TimeoutMs)
         s.read.parquet(out).filter(col("session_start") < sentinelTs)
       },
       Some(InlineOracles.stream_sessionize)),
@@ -784,25 +595,17 @@ private[graft] object StreamingQueries {
       // committed base equals batch corpus_drift however arrivals
       // were split — corpus_drift's oracle IS this oracle
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/smx_src_$sf"
-        val cells = s"${Queries.cacheRoot}/smx_cells_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(cells))
+        val cells = harnessDir("smx", "cells", d)
         val docs = Tables(s, d).documents
-        docs.filter(col("doc_id") % 10 =!= 0)
-          .withColumn("source", when(col("doc_id") % 7 === 0,
-            lit("web-rescrape")).otherwise(col("source")))
-          .select("doc_id", "lang", "source")
-          .repartition(4).write.mode("overwrite").json(src)
-        val schema = StructType(Seq(StructField("doc_id", LongType),
-          StructField("lang", StringType),
-          StructField("source", StringType)))
-        val ckpt = freshCheckpoint("smx", d)
-        graft.streaming.Streams.mixStream(s, src, schema, cells, ckpt)
-          .awaitTermination(120000)
-        graft.streaming.Streams.mixDriftVsBase(s, cells, docs)
+        val (src, schema, ckpt) = stageStream("smx", d,
+          docs.filter(col("doc_id") % 10 =!= 0)
+            .withColumn("source", when(col("doc_id") % 7 === 0,
+              lit("web-rescrape")).otherwise(col("source")))
+            .select("doc_id", "lang", "source"),
+          wipe = Seq(cells))
+        Streams.awaitDone(Streams.mixStream(s, src, schema, cells, ckpt),
+          TimeoutMs)
+        Streams.mixDriftVsBase(s, cells, docs)
       },
       Some(InlineOracles.stream_mix_drift)),
 
@@ -817,7 +620,7 @@ private[graft] object StreamingQueries {
       // (modulus = ceil(n/2000), derived identically on both sides),
       // so the driver collect stays flat at any events cardinality
       (s, d) => withShufflePartitions(s, 4) {
-        graft.streaming.Streams.watermarkDropRun(s,
+        Streams.watermarkDropRun(s,
           Tables(s, d).events, delayUs = 86400000000L,
           windowUs = 3600000000L, nBatches = 4, sampleBudget = 2000,
           outDir = s"${Queries.cacheRoot}/wmd_${new java.io.File(d).getName}")
@@ -834,9 +637,8 @@ private[graft] object StreamingQueries {
       // whole streaming lifecycle
       (s, d) => withShufflePartitions(s, 4) {
         implicit val sp: SparkSession = s
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/ppng_$sf"
-        val sg = s"${Queries.cacheRoot}/ppng_sig_$sf"
+        val src = s"${Queries.cacheRoot}/ppng_${new java.io.File(d).getName}"
+        val sg = harnessDir("ppng", "sig", d)
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(sg))
         Multimodal.stagePatternImageFiles(Tables(s, d).documents, src)
         val ckpt = freshCheckpoint("sid", d)
@@ -847,9 +649,9 @@ private[graft] object StreamingQueries {
         // 4096 keeps the sf0.1 run multi-batch (5000 files → 2
         // batches) while dropping one whole batch of listing +
         // source-log + decode fixed cost vs the previous 2048.
-        graft.streaming.Streams.imageHashStream(s, src, sg, ckpt,
-          maxFilesPerTrigger = 4096).awaitTermination(180000)
-        graft.streaming.Streams.imageDedupFromShards(s, sg)
+        Streams.awaitDone(Streams.imageHashStream(s, src, sg, ckpt,
+          maxFilesPerTrigger = 4096), timeoutMs = 180000)
+        Streams.imageDedupFromShards(s, sg)
       },
       Some(InlineOracles.image_phash_dedup)),
 
@@ -862,20 +664,13 @@ private[graft] object StreamingQueries {
       // stream, and unlike t-digest/KLL the merge is EXACT — the
       // one-shot batch derivation is the oracle on ANY arrival split
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/sqn_src_$sf"
-        val hd = s"${Queries.cacheRoot}/sqn_hist_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(hd))
-        Tables(s, d).events.select("event_id", "event_type", "value")
-          .repartition(4).write.mode("overwrite").json(src)
-        val schema = StructType(Seq(StructField("event_id", LongType),
-          StructField("event_type", StringType),
-          StructField("value", DoubleType)))
-        val ckpt = freshCheckpoint("sqn", d)
-        graft.streaming.Streams.histStream(s, src, schema, hd,
-          "event_type", "value", width = 4.0, ckpt).awaitTermination(120000)
-        graft.streaming.Streams.quantilesFromShards(s, hd, "event_type",
+        val hd = harnessDir("sqn", "hist", d)
+        val (src, schema, ckpt) = stageStream("sqn", d,
+          Tables(s, d).events.select("event_id", "event_type", "value"),
+          wipe = Seq(hd))
+        Streams.awaitDone(Streams.histStream(s, src, schema, hd,
+          "event_type", "value", width = 4.0, ckpt), TimeoutMs)
+        Streams.quantilesFromShards(s, hd, "event_type",
           Seq(250000L, 500000L, 750000L, 900000L, 990000L), width = 4.0)
       },
       Some(InlineOracles.stream_quantiles)),
@@ -888,20 +683,13 @@ private[graft] object StreamingQueries {
       // one-shot batch chain however arrivals were batched — the
       // batch ts_anomaly SQL is the oracle
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/sta_src_$sf"
-        val cnt = s"${Queries.cacheRoot}/sta_cnt_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(cnt))
-        Tables(s, d).events.select("event_id", "ts", "event_type")
-          .repartition(6).write.mode("overwrite").json(src)
-        val schema = StructType(Seq(StructField("event_id", LongType),
-          StructField("ts", LongType),
-          StructField("event_type", StringType)))
-        val ckpt = freshCheckpoint("sta", d)
-        graft.streaming.Streams.hourlyCountStream(s, src, schema, cnt,
-          ckpt).awaitTermination(120000)
-        graft.streaming.Streams.anomalyFromShards(s, cnt)
+        val cnt = harnessDir("sta", "cnt", d)
+        val (src, schema, ckpt) = stageStream("sta", d,
+          Tables(s, d).events.select("event_id", "ts", "event_type"),
+          parts = 6, wipe = Seq(cnt))
+        Streams.awaitDone(Streams.hourlyCountStream(s, src, schema, cnt,
+          ckpt), TimeoutMs)
+        Streams.anomalyFromShards(s, cnt)
       },
       Some(InlineOracles.ts_anomaly)),
 
@@ -912,20 +700,13 @@ private[graft] object StreamingQueries {
       // hourly counts on any arrival split, so the batch
       // ts_decompose SQL is the oracle
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/sdc_src_$sf"
-        val cnt = s"${Queries.cacheRoot}/sdc_cnt_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(cnt))
-        Tables(s, d).events.select("event_id", "ts", "event_type")
-          .repartition(6).write.mode("overwrite").json(src)
-        val schema = StructType(Seq(StructField("event_id", LongType),
-          StructField("ts", LongType),
-          StructField("event_type", StringType)))
-        val ckpt = freshCheckpoint("sdc", d)
-        graft.streaming.Streams.hourlyCountStream(s, src, schema, cnt,
-          ckpt).awaitTermination(120000)
-        graft.streaming.Streams.decomposeFromShards(s, cnt, period = 24)
+        val cnt = harnessDir("sdc", "cnt", d)
+        val (src, schema, ckpt) = stageStream("sdc", d,
+          Tables(s, d).events.select("event_id", "ts", "event_type"),
+          parts = 6, wipe = Seq(cnt))
+        Streams.awaitDone(Streams.hourlyCountStream(s, src, schema, cnt,
+          ckpt), TimeoutMs)
+        Streams.decomposeFromShards(s, cnt, period = 24)
       },
       Some(InlineOracles.ts_decompose)),
 
@@ -936,20 +717,13 @@ private[graft] object StreamingQueries {
       // shards equal the one-shot hourly counts on any arrival split,
       // so the batch ts_seasonal_anomaly SQL is the oracle
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/ssa_src_$sf"
-        val cnt = s"${Queries.cacheRoot}/ssa_cnt_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(cnt))
-        Tables(s, d).events.select("event_id", "ts", "event_type")
-          .repartition(6).write.mode("overwrite").json(src)
-        val schema = StructType(Seq(StructField("event_id", LongType),
-          StructField("ts", LongType),
-          StructField("event_type", StringType)))
-        val ckpt = freshCheckpoint("ssa", d)
-        graft.streaming.Streams.hourlyCountStream(s, src, schema, cnt,
-          ckpt).awaitTermination(120000)
-        graft.streaming.Streams.seasonalAnomalyFromShards(s, cnt,
+        val cnt = harnessDir("ssa", "cnt", d)
+        val (src, schema, ckpt) = stageStream("ssa", d,
+          Tables(s, d).events.select("event_id", "ts", "event_type"),
+          parts = 6, wipe = Seq(cnt))
+        Streams.awaitDone(Streams.hourlyCountStream(s, src, schema, cnt,
+          ckpt), TimeoutMs)
+        Streams.seasonalAnomalyFromShards(s, cnt,
           period = 24, threshold = 3.5)
       },
       Some(InlineOracles.ts_seasonal_anomaly)),
@@ -960,20 +734,13 @@ private[graft] object StreamingQueries {
       // merged counts equal the one-shot hourly aggregation on any
       // arrival split, so the batch ts_crosscorr SQL is the oracle
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/stx_src_$sf"
-        val cnt = s"${Queries.cacheRoot}/stx_cnt_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(cnt))
-        Tables(s, d).events.select("event_id", "ts", "event_type")
-          .repartition(6).write.mode("overwrite").json(src)
-        val schema = StructType(Seq(StructField("event_id", LongType),
-          StructField("ts", LongType),
-          StructField("event_type", StringType)))
-        val ckpt = freshCheckpoint("stx", d)
-        graft.streaming.Streams.hourlyCountStream(s, src, schema, cnt,
-          ckpt).awaitTermination(120000)
-        graft.streaming.Streams.crosscorrFromShards(s, cnt)
+        val cnt = harnessDir("stx", "cnt", d)
+        val (src, schema, ckpt) = stageStream("stx", d,
+          Tables(s, d).events.select("event_id", "ts", "event_type"),
+          parts = 6, wipe = Seq(cnt))
+        Streams.awaitDone(Streams.hourlyCountStream(s, src, schema, cnt,
+          ckpt), TimeoutMs)
+        Streams.crosscorrFromShards(s, cnt)
       },
       Some(InlineOracles.ts_crosscorr)),
 
@@ -983,21 +750,13 @@ private[graft] object StreamingQueries {
       // exact decimal sums published as digit strings (r9 contract),
       // the batch ts_autocorr SQL is the oracle
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/sac_src_$sf"
-        val cnt = s"${Queries.cacheRoot}/sac_cnt_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(cnt))
-        Tables(s, d).events.select("event_id", "ts", "event_type")
-          .repartition(6).write.mode("overwrite").json(src)
-        val schema = StructType(Seq(StructField("event_id", LongType),
-          StructField("ts", LongType),
-          StructField("event_type", StringType)))
-        val ckpt = freshCheckpoint("sac", d)
-        graft.streaming.Streams.hourlyCountStream(s, src, schema, cnt,
-          ckpt).awaitTermination(120000)
-        Queries.pubDec38AsString(
-          graft.streaming.Streams.autocorrFromShards(s, cnt))
+        val cnt = harnessDir("sac", "cnt", d)
+        val (src, schema, ckpt) = stageStream("sac", d,
+          Tables(s, d).events.select("event_id", "ts", "event_type"),
+          parts = 6, wipe = Seq(cnt))
+        Streams.awaitDone(Streams.hourlyCountStream(s, src, schema, cnt,
+          ckpt), TimeoutMs)
+        Queries.pubDec38AsString(Streams.autocorrFromShards(s, cnt))
       },
       Some(InlineOracles.ts_autocorr)),
 
@@ -1008,22 +767,14 @@ private[graft] object StreamingQueries {
       // equal the one-shot moments however arrivals were batched —
       // the batch moments SQL is the oracle
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/smo_src_$sf"
-        val mom = s"${Queries.cacheRoot}/smo_mom_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(mom))
-        Tables(s, d).documents
-          .select("doc_id", "text", "source")
-          .repartition(4).write.mode("overwrite").json(src)
-        val schema = StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType),
-          StructField("source", StringType)))
-        val ckpt = freshCheckpoint("smo", d)
-        graft.streaming.Streams.momentsStream(s, src, schema, mom,
-          "source", ckpt).awaitTermination(120000)
+        val mom = harnessDir("smo", "mom", d)
+        val (src, schema, ckpt) = stageStream("smo", d,
+          Tables(s, d).documents.select("doc_id", "text", "source"),
+          wipe = Seq(mom))
+        Streams.awaitDone(Streams.momentsStream(s, src, schema, mom,
+          "source", ckpt), TimeoutMs)
         Queries.pubDec38AsString(
-          graft.streaming.Streams.momentsFromShards(s, mom, "source"))
+          Streams.momentsFromShards(s, mom, "source"))
       },
       Some(InlineOracles.stream_moments)),
 
@@ -1034,21 +785,13 @@ private[graft] object StreamingQueries {
       // shards equal the one-shot data-card row however arrivals
       // were batched — the batch fingerprint SQL is the oracle
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/sfp_src_$sf"
-        val fpd = s"${Queries.cacheRoot}/sfp_fp_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(fpd))
-        Tables(s, d).documents.select("doc_id", "text", "source")
-          .repartition(4).write.mode("overwrite").json(src)
-        val schema = StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType),
-          StructField("source", StringType)))
-        val ckpt = freshCheckpoint("sfp", d)
-        graft.streaming.Streams.fingerprintStream(s, src, schema, fpd,
-          ckpt).awaitTermination(120000)
-        Queries.pubDec38AsString(
-          graft.streaming.Streams.fingerprintFromShards(s, fpd))
+        val fpd = harnessDir("sfp", "fp", d)
+        val (src, schema, ckpt) = stageStream("sfp", d,
+          Tables(s, d).documents.select("doc_id", "text", "source"),
+          wipe = Seq(fpd))
+        Streams.awaitDone(Streams.fingerprintStream(s, src, schema, fpd,
+          ckpt), TimeoutMs)
+        Queries.pubDec38AsString(Streams.fingerprintFromShards(s, fpd))
       },
       Some(s"""
         SELECT source, cast(count(*) as bigint) as n_docs,
@@ -1065,20 +808,13 @@ private[graft] object StreamingQueries {
       // merged store equals the one-shot fit however arrivals were
       // batched — the batch fit SQL is the oracle
       (s, d) => withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.types._
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/sbf_src_$sf"
-        val msd = s"${Queries.cacheRoot}/sbf_mass_$sf"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(msd))
-        Tables(s, d).documents.select("doc_id", "text", "source")
-          .repartition(4).write.mode("overwrite").json(src)
-        val schema = StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType),
-          StructField("source", StringType)))
-        val ckpt = freshCheckpoint("sbf", d)
-        graft.streaming.Streams.massStream(s, src, schema, msd,
-          ckpt).awaitTermination(120000)
-        graft.streaming.Streams.fitFromShards(s, msd,
+        val msd = harnessDir("sbf", "mass", d)
+        val (src, schema, ckpt) = stageStream("sbf", d,
+          Tables(s, d).documents.select("doc_id", "text", "source"),
+          wipe = Seq(msd))
+        Streams.awaitDone(Streams.massStream(s, src, schema, msd,
+          ckpt), TimeoutMs)
+        Streams.fitFromShards(s, msd,
           budgetTokens = 75000L, maxEpochsPct = 300L)
       },
       Some(TextOracleSql.tokenBudgetFitSql(

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
+import graft.streaming.Streams
 import graft.Queries.Q
 
 /** Table-lifecycle registry rows (SURVEY §F plus the co-located
@@ -660,22 +661,16 @@ object TableQueries {
       // back through `spark.read.format("graft")` ≡ the batch
       // recompute (the oracle)
       (s, d) => {
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/dsv2s_src_$sf"
-        val path = s"${Queries.cacheRoot}/dsv2s_t_$sf"
-        val ckpt = Queries.freshCheckpoint("dsv2s", d)
-        VersionedTable.destroy(path)
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(src))
+        val path = Queries.harnessDir("dsv2s", "t", d)
         val ev = Tables(s, d).events
           .select("event_id", "user_id", "event_type", "value")
-        ev.filter(col("event_id") % 2 === 0).write.parquet(src)
+        val (src, schema, ckpt) = Queries.stageStream("dsv2s", d,
+          ev.filter(col("event_id") % 2 === 0), parts = 0,
+          format = "parquet", wipe = Seq(path))
         def run(): Unit = Queries.withShufflePartitions(s, 4) {
-          val q = s.readStream.schema(ev.schema).parquet(src)
-            .writeStream.format("graft")
-            .option("path", path).option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination(120000)
+          Streams.awaitDone(Streams.sinkRun(s.readStream.schema(schema)
+            .parquet(src).writeStream.format("graft").option("path", path),
+            ckpt), timeoutMs = 120000)
         }
         run() // wave 1
         ev.filter(col("event_id") % 2 =!= 0)
@@ -704,9 +699,8 @@ object TableQueries {
       // the resumed stream emits only it). Final streamed accumulation
       // ≡ the live table ≡ the SQL recompute (the oracle)
       (s, d) => Queries.withShufflePartitions(s, 8) {
-        val sf = new java.io.File(d).getName
-        val src = s"${Queries.cacheRoot}/dsvs_src_$sf"
-        val out = s"${Queries.cacheRoot}/dsvs_out_$sf"
+        val src = Queries.harnessDir("dsvs", "src", d)
+        val out = Queries.harnessDir("dsvs", "out", d)
         val ckpt = Queries.freshCheckpoint("dsvs", d)
         VersionedTable.destroy(src)
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
@@ -714,14 +708,10 @@ object TableQueries {
           .select("o_orderkey", "o_custkey", "o_totalprice")
         VersionedTable.write(ords.filter(col("o_orderkey") % 3 === 0), src)
         VersionedTable.deleteVectors(s, src, "o_orderkey % 9 = 0")
-        def drain(): Unit = {
-          val q = s.readStream.format("graft").load(src)
-            .writeStream.format("parquet")
-            .option("path", out).option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination(120000)
-        }
+        def drain(): Unit =
+          Streams.awaitDone(Streams.sinkRun(s.readStream.format("graft")
+            .load(src).writeStream.format("parquet").option("path", out),
+            ckpt), timeoutMs = 120000)
         drain() // initial snapshot (post-DV)
         VersionedTable.append(s,
           ords.filter(col("o_orderkey") % 3 === 1), src)

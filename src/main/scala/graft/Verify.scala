@@ -54,6 +54,10 @@ object Verify {
         SparkEntry.queries.toSeq.sortBy(_._1)
       else SparkEntry.queries.toSeq
     ordered.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
+      // a query that throws must leave NO result behind: a stale dump
+      // from an earlier run into the same outDir would pass the check
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(s"$outDir/$name"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import graft.operators.Materialize.Pinnable
+import graft.streaming.Streams
 
 /** Declarative multi-stage pipeline runner — Spark-native
   * re-expression of the reference's DLT pipeline surface: a LIVE
@@ -242,7 +243,6 @@ object Pipeline {
                      stages: Seq[Stage], storageDir: String,
                      checkpoint: String, key: String, orderCol: String,
                      tieBreaker: String, maxFilesPerTrigger: Int = 3,
-                     timeoutMs: Long = 120000,
                      /** >0: vacuum each stage table down to the last N
                        * snapshots after the run — an incremental table
                        * commits one version per micro-batch, so a
@@ -253,17 +253,12 @@ object Pipeline {
     require(stages.map(_.name).distinct.size == stages.size,
       "stage names must be unique")
     import org.apache.spark.sql.functions.col
-    val q = graft.streaming.Streams
-      .fileIngest(spark, srcPath, schema, maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(payloadCols.map(col): _*)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(
-        incrementalBatch(spark, stages, storageDir, key, orderCol,
-          tieBreaker) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(timeoutMs)
+    Streams.awaitDone(Streams.foreachBatchRun(
+      Streams.fileIngest(spark, srcPath, schema,
+          maxFilesPerTrigger = maxFilesPerTrigger)
+        .select(payloadCols.map(col): _*), checkpoint)(
+      incrementalBatch(spark, stages, storageDir, key, orderCol,
+        tieBreaker)), timeoutMs = 120000)
     if (retainVersions > 0)
       stages.foreach(st =>
         VersionedTable.vacuum(s"$storageDir/${st.name}", retainVersions))
@@ -406,22 +401,16 @@ object Pipeline {
   def runIncrementalCdf(spark: SparkSession, bronzePath: String,
                         stages: Seq[Stage], storageDir: String,
                         checkpoint: String, key: String, orderCol: String,
-                        tieBreaker: String,
-                        timeoutMs: Long = 180000): RunResult = {
+                        tieBreaker: String): RunResult = {
     require(stages.nonEmpty, "pipeline needs at least one stage")
     require(stages.map(_.name).distinct.size == stages.size,
       "stage names must be unique")
     val logSchema = StructType(Seq(StructField("version", IntegerType)))
-    val q = spark.readStream.schema(logSchema)
-      .json(s"$bronzePath/_graft_log")
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(
-        cdfIncrementalBatch(spark, bronzePath, stages, storageDir, key,
-          orderCol, tieBreaker) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(timeoutMs)
+    Streams.awaitDone(Streams.foreachBatchRun(
+      spark.readStream.schema(logSchema)
+        .json(s"$bronzePath/_graft_log"), checkpoint)(
+      cdfIncrementalBatch(spark, bronzePath, stages, storageDir, key,
+        orderCol, tieBreaker)), timeoutMs = 180000)
     val tables = stages.map(st =>
       st.name -> VersionedTable.read(spark, s"$storageDir/${st.name}")).toMap
     RunResult(tables, incrementalEventLog(spark, storageDir))

@@ -68,7 +68,15 @@ class NoForkRawLocalFileSystem extends RawLocalFileSystem {
     * COUNT, so the win grows with the table, and it removes the
     * "Failed to exec spawn helper" failure mode for good. Path
     * qualification matches the base class byte for byte
-    * (new Path(file.getPath).makeQualified(uri, cwd)). */
+    * (new Path(file.getPath).makeQualified(uri, cwd)). A path that
+    * does not exist — vanished mid-call, or one under a regular file
+    * ("Not a directory") — is a `FileNotFoundException`, which is
+    * what `exists()` and the other callers expect.
+    *
+    * Limitation: `PosixFilePermission` carries only the nine rwx
+    * bits, so setuid/setgid/sticky bits (e.g. the sticky bit on
+    * `/tmp`) are missing from the returned permission where Hadoop's
+    * `ls -ld` path reports them. Harmless for graft's own files. */
   override def getFileStatus(f: Path): org.apache.hadoop.fs.FileStatus = {
     val localf = pathToFile(f)
     try {
@@ -91,8 +99,10 @@ class NoForkRawLocalFileSystem extends RawLocalFileSystem {
         throw new java.io.FileNotFoundException(s"File $f does not exist")
       // non-POSIX store or exotic principal lookup failure: fall back
       // to Hadoop's own (lazy, possibly forking) status
-      case _: UnsupportedOperationException | _: java.io.IOException
-          if localf.exists() => super.getFileStatus(f)
+      case _: UnsupportedOperationException | _: java.io.IOException =>
+        if (localf.exists()) super.getFileStatus(f)
+        else throw new java.io.FileNotFoundException(
+          s"File $f does not exist")
     }
   }
 

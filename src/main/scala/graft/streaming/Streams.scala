@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import graft.operators.Materialize.Pinnable
 
@@ -42,6 +43,39 @@ object Streams {
       .withColumn("source_file", input_file_name())
       .withColumn("inserted_at", current_timestamp())
 
+  /** Wait for an AvailableNow run to drain. A query that failed
+    * rethrows its error here; one still running at `timeoutMs` is
+    * stopped and reported as a `TimeoutException`, so a half-drained
+    * sink never passes for a finished one. */
+  def awaitDone(q: StreamingQuery, timeoutMs: Long): Unit =
+    if (!q.awaitTermination(timeoutMs)) {
+      q.stop()
+      throw new java.util.concurrent.TimeoutException(
+        s"stream ${q.id} still running after $timeoutMs ms; stopped")
+    }
+
+  /** The AvailableNow `foreachBatch` lifecycle every sink below shares:
+    * drain what `in` has now through `fn`, one micro-batch at a time,
+    * exactly-once over the offsets in `checkpoint`. */
+  private[graft] def foreachBatchRun(in: DataFrame, checkpoint: String)
+                                    (fn: (DataFrame, Long) => Unit)
+      : StreamingQuery =
+    in.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(fn)
+      .trigger(Trigger.AvailableNow())
+      .start()
+
+  /** The AvailableNow append-mode lifecycle for a built-in sink: `w`
+    * names the sink (parquet path, memory table, graft table), the
+    * offsets live in `checkpoint`. */
+  private[graft] def sinkRun(w: DataStreamWriter[Row],
+                             checkpoint: String): StreamingQuery =
+    w.option("checkpointLocation", checkpoint)
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .start()
+
   /** One micro-batch of the streaming MERGE sink: recency-aware upsert
     * of the batch into the versioned table, exactly-once via a
     * batch-id marker in the commit log — a retried batch id is a
@@ -75,14 +109,11 @@ object Streams {
                   tablePath: String, key: String, orderCol: String,
                   tieBreaker: String, checkpoint: String,
                   payloadCols: Seq[String],
-                  maxFilesPerTrigger: Int = 32): org.apache.spark.sql.streaming.StreamingQuery =
-    fileIngest(spark, srcPath, schema, maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(payloadCols.map(col): _*)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(mergeBatch(spark, tablePath, key, orderCol, tieBreaker) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+                  maxFilesPerTrigger: Int = 32): StreamingQuery =
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
+        maxFilesPerTrigger = maxFilesPerTrigger)
+      .select(payloadCols.map(col): _*), checkpoint)(
+      mergeBatch(spark, tablePath, key, orderCol, tieBreaker))
 
   /** One micro-batch of the streaming APPEND sink (r10): the batch's
     * rows commit as NEW pool files while the whole current manifest
@@ -116,15 +147,11 @@ object Streams {
                    schema: StructType, tablePath: String,
                    checkpoint: String, payloadCols: Seq[String],
                    maxFilesPerTrigger: Int = 32)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    fileIngest(spark, srcPath, schema,
+      : StreamingQuery =
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
       maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(payloadCols.map(col): _*)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(appendBatch(spark, tablePath) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .select(payloadCols.map(col): _*), checkpoint)(
+      appendBatch(spark, tablePath))
 
   /** One trigger of the CDF STREAMING CONSUMER: apply every source
     * version the replica has not seen yet, in order, as keyed
@@ -203,16 +230,12 @@ object Streams {
   def cdfSourceFollow(spark: SparkSession, srcPath: String,
                       replicaPath: String, keyCols: Seq[String],
                       checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val logSchema = StructType(Seq(StructField("version",
       org.apache.spark.sql.types.IntegerType)))
-    spark.readStream.schema(logSchema)
-      .json(s"$srcPath/_graft_log")
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(cdfApplyBatch(spark, srcPath, replicaPath, keyCols) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    foreachBatchRun(spark.readStream.schema(logSchema)
+      .json(s"$srcPath/_graft_log"), checkpoint)(
+      cdfApplyBatch(spark, srcPath, replicaPath, keyCols))
   }
 
   /** Streaming exact dedup: at-least-once sources (retried files,
@@ -433,16 +456,12 @@ object Streams {
                          pairsDir: String, checkpoint: String,
                          shingleK: Int = 3, numPerm: Int = 64,
                          bands: Int = 16, threshold: Double = 0.5,
-                         maxFilesPerTrigger: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    fileIngest(spark, srcPath, schema,
+                         maxFilesPerTrigger: Int = 2): StreamingQuery =
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
       maxFilesPerTrigger = maxFilesPerTrigger)
-      .select("doc_id", "text")
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(dedupIndexBatch(indexDir, pairsDir, shingleK, numPerm,
-        bands, threshold) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .select("doc_id", "text"), checkpoint)(
+      dedupIndexBatch(indexDir, pairsDir, shingleK, numPerm, bands,
+        threshold))
 
   /** One micro-batch of the streaming ANN probe sink — the SERVING
     * side of the persisted IVF index run continuously: each arriving
@@ -472,15 +491,11 @@ object Streams {
                      schema: StructType, indexPath: String,
                      outDir: String, checkpoint: String,
                      nprobe: Int = 4, k: Int = 5,
-                     maxFilesPerTrigger: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    fileIngest(spark, srcPath, schema, format = "parquet",
+                     maxFilesPerTrigger: Int = 2): StreamingQuery =
+    foreachBatchRun(fileIngest(spark, srcPath, schema, format = "parquet",
       maxFilesPerTrigger = maxFilesPerTrigger)
-      .select("vec_id", "embedding")
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(annProbeBatch(indexPath, outDir, nprobe, k) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .select("vec_id", "embedding"), checkpoint)(
+      annProbeBatch(indexPath, outDir, nprobe, k))
 
   /** One micro-batch of the streaming anomaly monitor's count store:
     * the batch's (event_type, hour_us) counts land as a shard under
@@ -504,15 +519,11 @@ object Streams {
                         schema: StructType, outDir: String,
                         checkpoint: String,
                         maxFilesPerTrigger: Int = 3)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    fileIngest(spark, srcPath, schema,
+      : StreamingQuery =
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
       maxFilesPerTrigger = maxFilesPerTrigger)
-      .select("event_type", "ts")
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(hourlyCountBatch(outDir) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .select("event_type", "ts"), checkpoint)(
+      hourlyCountBatch(outDir))
 
   /** The trailing-window z-score monitor re-derived from the merged
     * count shards — equals the one-shot batch
@@ -596,19 +607,14 @@ object Streams {
                        key: String, tsCol: String,
                        rightCols: Seq[String],
                        maxFilesPerTrigger: Int = 3)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    fileIngest(spark, srcPath, schema,
+      : StreamingQuery =
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
       maxFilesPerTrigger = maxFilesPerTrigger)
       // payload only — fileIngest's source_file bookkeeping column
       // must not leak into the enriched output
       .select(schema.fieldNames.toIndexedSeq.map(
-        org.apache.spark.sql.functions.col): _*)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(asofEnrichBatch(right, key, tsCol, rightCols,
-        outDir) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+        org.apache.spark.sql.functions.col): _*), checkpoint)(
+      asofEnrichBatch(right, key, tsCol, rightCols, outDir))
 
   /** Continuous corpus curation: document micro-batches pass the
     * hashed-token quality classifier map-side, then cross-batch
@@ -627,7 +633,7 @@ object Streams {
   def curationStream(spark: SparkSession, srcPath: String,
                      schema: StructType, outPath: String,
                      checkpoint: String,
-                     maxFilesPerTrigger: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
+                     maxFilesPerTrigger: Int = 2): StreamingQuery = {
     val sha60 = (c: Column) => org.apache.spark.sql.graft.GraftBridge.column(
       graft.functions.expressions.Sha60(
         org.apache.spark.sql.graft.GraftBridge.expression(c)))
@@ -635,7 +641,7 @@ object Streams {
     // the SHARED classifier formula — the streaming twin scores with
     // the same expression as the batch operator by construction
     val scoreRaw = graft.operators.TextAnalysis.clfScoreRaw(toks)
-    fileIngest(spark, srcPath, schema,
+    val scored = fileIngest(spark, srcPath, schema,
       maxFilesPerTrigger = maxFilesPerTrigger)
       .select(sha60(col("text")).as("text_hash"),
         size(toks).cast("long").as("n_tokens"),
@@ -643,12 +649,8 @@ object Streams {
           .as("clf_score"))
       .filter(col("clf_score") > 0.0)
       .dropDuplicates("text_hash")
-      .writeStream
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    sinkRun(scored.writeStream.format("parquet").option("path", outPath),
+      checkpoint)
   }
 
   /** One micro-batch of the streaming token-count sink: the batch's
@@ -676,15 +678,11 @@ object Streams {
   def tokenCountStream(spark: SparkSession, srcPath: String,
                        schema: StructType, countsDir: String,
                        checkpoint: String,
-                       maxFilesPerTrigger: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    fileIngest(spark, srcPath, schema,
+                       maxFilesPerTrigger: Int = 2): StreamingQuery =
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
       maxFilesPerTrigger = maxFilesPerTrigger)
-      .select("text")
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(tokenCountBatch(countsDir) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .select("text"), checkpoint)(
+      tokenCountBatch(countsDir))
 
   /** Point-in-time heavy hitters over the accumulated count shards:
     * merge (groupBy word, sum — shuffles only count rows) and filter
@@ -726,15 +724,11 @@ object Streams {
   def mixStream(spark: SparkSession, srcPath: String,
                 schema: StructType, cellsDir: String,
                 checkpoint: String,
-                maxFilesPerTrigger: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    fileIngest(spark, srcPath, schema,
+                maxFilesPerTrigger: Int = 2): StreamingQuery =
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
       maxFilesPerTrigger = maxFilesPerTrigger)
-      .select("lang", "source")
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(mixCellsBatch(cellsDir) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .select("lang", "source"), checkpoint)(
+      mixCellsBatch(cellsDir))
 
   /** Point-in-time mix drift of the accumulated incoming shards vs a
     * committed base corpus — identical output to the batch
@@ -768,16 +762,12 @@ object Streams {
   def profileStream(spark: SparkSession, srcPath: String,
                     schema: StructType, profDir: String,
                     checkpoint: String,
-                    maxFilesPerTrigger: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    fileIngest(spark, srcPath, schema,
+                    maxFilesPerTrigger: Int = 2): StreamingQuery =
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
       maxFilesPerTrigger = maxFilesPerTrigger)
       // profile the DATA columns, not the ingest lineage decoration
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(profileBatch(profDir) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
+      profileBatch(profDir))
 
   /** Point-in-time table profile from the accumulated shards. */
   def profileFromShards(spark: SparkSession,
@@ -802,15 +792,11 @@ object Streams {
   def momentsStream(spark: SparkSession, srcPath: String,
                     schema: StructType, momDir: String, groupCol: String,
                     checkpoint: String,
-                    maxFilesPerTrigger: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    fileIngest(spark, srcPath, schema,
+                    maxFilesPerTrigger: Int = 2): StreamingQuery =
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
       maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(momentsBatch(momDir, groupCol) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
+      momentsBatch(momDir, groupCol))
 
   /** Point-in-time grouped moment statistics from the accumulated
     * shards — identical derivation to the batch operator, so the
@@ -846,15 +832,11 @@ object Streams {
   def kminStream(spark: SparkSession, srcPath: String,
                  schema: StructType, sigDir: String, k: Int,
                  checkpoint: String,
-                 maxFilesPerTrigger: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    fileIngest(spark, srcPath, schema,
+                 maxFilesPerTrigger: Int = 2): StreamingQuery =
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
       maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(kminBatch(sigDir, k) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
+      kminBatch(sigDir, k))
 
   /** Point-in-time pairwise overlap estimates from the accumulated
     * signature shards. */
@@ -895,22 +877,18 @@ object Streams {
     * game. */
   def imageHashStream(spark: SparkSession, srcDir: String,
                       sigDir: String, checkpoint: String,
-                      maxFilesPerTrigger: Int = 64): org.apache.spark.sql.streaming.StreamingQuery = {
+                      maxFilesPerTrigger: Int = 64): StreamingQuery = {
     val binSchema = StructType(Seq(
       StructField("path", StringType),
       StructField("modificationTime", TimestampType),
       StructField("length", LongType),
       StructField("content", BinaryType)))
-    spark.readStream.format("binaryFile")
+    foreachBatchRun(spark.readStream.format("binaryFile")
       .schema(binSchema)
       .option("pathGlobFilter", "*.png")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .load(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(imageHashBatch(sigDir) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .load(srcDir), checkpoint)(
+      imageHashBatch(sigDir))
   }
 
   /** Point-in-time perceptual dedup groups off the accumulated
@@ -949,17 +927,13 @@ object Streams {
   def covarianceStream(spark: SparkSession, srcPath: String,
                        schema: StructType, covDir: String,
                        checkpoint: String,
-                       maxFilesPerTrigger: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
+                       maxFilesPerTrigger: Int = 2): StreamingQuery =
     // parquet staging: float vectors roundtrip bit-exactly (json
     // would re-parse decimal strings)
-    fileIngest(spark, srcPath, schema, format = "parquet",
+    foreachBatchRun(fileIngest(spark, srcPath, schema, format = "parquet",
       maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(covarianceBatch(covDir) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
+      covarianceBatch(covDir))
 
   /** Point-in-time covariance from the accumulated moment shards —
     * identical derivation to the batch operator, so the batch SQL is
@@ -992,15 +966,11 @@ object Streams {
                          schema: StructType, metDir: String,
                          exps: Seq[graft.operators.Expectation],
                          checkpoint: String,
-                         maxFilesPerTrigger: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    fileIngest(spark, srcPath, schema,
+                         maxFilesPerTrigger: Int = 2): StreamingQuery =
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
       maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(expectationsBatch(metDir, exps) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
+      expectationsBatch(metDir, exps))
 
   /** Point-in-time expectation counters from the accumulated shards —
     * associative sums, so the batch metrics SQL is the oracle. */
@@ -1034,15 +1004,11 @@ object Streams {
   def countMinStream(spark: SparkSession, srcPath: String,
                      schema: StructType, dir: String, checkpoint: String,
                      width: Int, depth: Int, probes: Seq[String],
-                     maxFilesPerTrigger: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    fileIngest(spark, srcPath, schema,
+                     maxFilesPerTrigger: Int = 2): StreamingQuery =
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
       maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(countMinBatch(dir, width, depth, probes) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
+      countMinBatch(dir, width, depth, probes))
 
   /** Point-in-time probe readout from the accumulated CMS shards —
     * associative sums re-merge to the one-shot counters, so the
@@ -1086,15 +1052,11 @@ object Streams {
                          schema: StructType, riDir: String,
                          rels: Seq[(String, String, DataFrame, String)],
                          checkpoint: String,
-                         maxFilesPerTrigger: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    fileIngest(spark, srcPath, schema,
+                         maxFilesPerTrigger: Int = 2): StreamingQuery =
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
       maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(refIntegrityBatch(riDir, rels) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
+      refIntegrityBatch(riDir, rels))
 
   /** Point-in-time orphan counters from the accumulated shards —
     * identical sums to the batch fact-side audit, so its SQL is the
@@ -1133,15 +1095,11 @@ object Streams {
   def histStream(spark: SparkSession, srcPath: String,
                  schema: StructType, histDir: String, groupCol: String,
                  valueCol: String, width: Double, checkpoint: String,
-                 maxFilesPerTrigger: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    fileIngest(spark, srcPath, schema,
+                 maxFilesPerTrigger: Int = 2): StreamingQuery =
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
       maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(histBatch(histDir, groupCol, valueCol, width) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
+      histBatch(histDir, groupCol, valueCol, width))
 
   /** Point-in-time quantile brackets from the accumulated histogram
     * shards — identical integer selection to the batch derivation,
@@ -1172,15 +1130,11 @@ object Streams {
   def fingerprintStream(spark: SparkSession, srcPath: String,
                         schema: StructType, fpDir: String,
                         checkpoint: String,
-                        maxFilesPerTrigger: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    fileIngest(spark, srcPath, schema,
+                        maxFilesPerTrigger: Int = 2): StreamingQuery =
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
       maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(fingerprintBatch(fpDir) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
+      fingerprintBatch(fpDir))
 
   /** Point-in-time fingerprint from the accumulated shards —
     * identical sums to the batch operator, so the batch SQL is the
@@ -1212,15 +1166,11 @@ object Streams {
   def massStream(spark: SparkSession, srcPath: String,
                  schema: StructType, massDir: String,
                  checkpoint: String,
-                 maxFilesPerTrigger: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    fileIngest(spark, srcPath, schema,
+                 maxFilesPerTrigger: Int = 2): StreamingQuery =
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
       maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(massBatch(massDir) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
+      massBatch(massDir))
 
   /** Point-in-time waterfilling fit from the accumulated mass
     * shards — identical sums to the batch operator, so the batch fit
@@ -1261,15 +1211,11 @@ object Streams {
   def cellStatsStream(spark: SparkSession, srcPath: String,
                       schema: StructType, cents: Array[Array[Double]],
                       countsDir: String, checkpoint: String,
-                      maxFilesPerTrigger: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    fileIngest(spark, srcPath, schema, format = "parquet",
+                      maxFilesPerTrigger: Int = 2): StreamingQuery =
+    foreachBatchRun(fileIngest(spark, srcPath, schema, format = "parquet",
       maxFilesPerTrigger = maxFilesPerTrigger)
-      .select("vec_id", "embedding")
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(cellCountBatch(cents, countsDir) _)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .select("vec_id", "embedding"), checkpoint)(
+      cellCountBatch(cents, countsDir))
 
   /** Point-in-time index health from the accumulated count shards. */
   def cellStatsFromShards(spark: SparkSession, countsDir: String,
@@ -1289,21 +1235,15 @@ object Streams {
   def sessionizeFileStream(spark: SparkSession, srcPath: String,
                            schema: StructType, outDir: String,
                            checkpoint: String, gapUs: Long,
-                           maxFilesPerTrigger: Int = 32): org.apache.spark.sql.streaming.StreamingQuery = {
+                           maxFilesPerTrigger: Int = 32): StreamingQuery = {
     implicit val sp: SparkSession = spark
     import spark.implicits._
     val events = fileIngest(spark, srcPath, schema,
         maxFilesPerTrigger = maxFilesPerTrigger)
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
       .as[EventRow]
-    sessionize(events, gapUs).toDF()
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .option("path", outDir)
-      .format("parquet")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    sinkRun(sessionize(events, gapUs).toDF().writeStream
+      .format("parquet").option("path", outDir), checkpoint)
   }
 
   /** [[windowAgg]] driven end-to-end from a FILE source into an
@@ -1315,19 +1255,13 @@ object Streams {
                           checkpoint: String,
                           windowLen: String = "1 hour",
                           watermark: String = "0 seconds",
-                          maxFilesPerTrigger: Int = 32): org.apache.spark.sql.streaming.StreamingQuery =
-    windowAgg(
+                          maxFilesPerTrigger: Int = 32): StreamingQuery =
+    sinkRun(windowAgg(
       fileIngest(spark, srcPath, schema,
           maxFilesPerTrigger = maxFilesPerTrigger)
         .withColumn("ts", timestamp_micros(col("ts"))),
       windowLen, Some(watermark))
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .option("path", outDir)
-      .format("parquet")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .writeStream.format("parquet").option("path", outDir), checkpoint)
 
   /** Batch analog of gap-based sessionization (oracle-checkable):
     * session boundaries via lag(), session ids via a running sum,

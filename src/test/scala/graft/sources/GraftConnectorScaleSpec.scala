@@ -193,7 +193,7 @@ class GraftConnectorScaleSpec extends SparkSpec {
       .option("checkpointLocation", s"$dir/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(60000)
+    graft.streaming.Streams.awaitDone(q, 60000)
     sizes.toSeq
   }
 
@@ -291,7 +291,7 @@ class GraftConnectorScaleSpec extends SparkSpec {
       val q = reader.load(src).writeStream.format("parquet")
         .option("path", out).option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(60000)
+      graft.streaming.Streams.awaitDone(q, 60000)
     }
     drain()
     assert(spark.read.parquet(out).count() == 100)

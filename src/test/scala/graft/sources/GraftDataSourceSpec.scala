@@ -174,7 +174,7 @@ class GraftDataSourceSpec extends SparkSpec {
         .option("path", path).option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      q.awaitTermination(60000)
+      graft.streaming.Streams.awaitDone(q, 60000)
     }
     run()
     assert(spark.read.format("graft").load(path).count() == 5)
@@ -205,7 +205,7 @@ class GraftDataSourceSpec extends SparkSpec {
         .option("path", path).option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      q.awaitTermination(60000)
+      graft.streaming.Streams.awaitDone(q, 60000)
     }
     run()
     assert(spark.read.format("graft").load(path).count() == 10)

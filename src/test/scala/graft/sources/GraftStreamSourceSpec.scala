@@ -27,7 +27,7 @@ class GraftStreamSourceSpec extends SparkSpec {
       .option("path", out).option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(60000)
+    graft.streaming.Streams.awaitDone(q, 60000)
   }
 
   test("initial snapshot + append deltas; restart re-emits nothing") {

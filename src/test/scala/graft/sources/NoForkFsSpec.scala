@@ -46,6 +46,18 @@ class NoForkFsSpec extends SparkSpec {
     Files.delete(f); Files.delete(dir)
   }
 
+  test("getFileStatus of a path under a regular file is FileNotFound") {
+    // readAttributes throws FileSystemException("Not a directory") here,
+    // not NoSuchFileException: exists() must still answer false
+    val dir = Files.createTempDirectory("noforkfnf")
+    val plain = Files.write(dir.resolve("plainfile"), Array[Byte](1))
+    val child = new HPath(plain.resolve("child").toUri)
+    val fs = FileSystem.get(new URI("file:///"), hconf)
+    intercept[java.io.FileNotFoundException](fs.getFileStatus(child))
+    assert(!fs.exists(child))
+    Files.delete(plain); Files.delete(dir)
+  }
+
   test("posixPerms decodes all nine bits") {
     assert(NoForkFs.posixPerms(Integer.parseInt("755", 8).toShort)
       === java.util.EnumSet.of(OWNER_READ, OWNER_WRITE, OWNER_EXECUTE,

@@ -13,7 +13,23 @@ class StreamsSpec extends SparkSpec {
                          sink: String): Unit = {
     val q = df.writeStream.format("memory").queryName(sink)
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
+    Streams.awaitDone(q, 60000)
+  }
+
+  test("awaitDone stops a stream still running at the timeout and throws") {
+    val src = Files.createTempDirectory("graft_timeout_src").toString + "/s"
+    val ckpt = Files.createTempDirectory("graft_timeout_ck").toString
+    spark.range(4).toDF("id").write.json(src)
+    // the one micro-batch blocks far past the await below
+    val q = Streams.foreachBatchRun(
+      spark.readStream.schema("id LONG").json(src), ckpt) { (_, _) =>
+      Thread.sleep(60000)
+    }
+    intercept[java.util.concurrent.TimeoutException] {
+      Streams.awaitDone(q, 2000)
+    }
+    assert(!q.isActive)
+    assert(spark.streams.active.isEmpty)
   }
 
   test("fileIngest picks up files incrementally with lineage columns") {
@@ -30,7 +46,7 @@ class StreamsSpec extends SparkSpec {
     val q = stream.writeStream.format("memory").queryName("ingested")
       .option("checkpointLocation", checkpoint)
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
+    Streams.awaitDone(q, 60000)
     val got = spark.sql("select * from ingested")
     assert(got.count() == 100)
     assert(got.filter(col("source_file").contains(".json")).count() == 100)
@@ -259,20 +275,18 @@ class StreamsSpec extends SparkSpec {
     ev.filter(col("event_id") % 2 === 0).repartition(2)
       .write.mode("overwrite").json(src)
     val ckpt = s"$dir/ckpt"
-    graft.streaming.Streams.mergeStream(spark, src, schema, table,
+    Streams.awaitDone(Streams.mergeStream(spark, src, schema, table,
       "user_id", "ts", "event_id", ckpt,
-      payloadCols = Seq("event_id", "ts", "user_id"))
-      .awaitTermination(60000)
+      payloadCols = Seq("event_id", "ts", "user_id")), 60000)
     val v1 = graft.operators.VersionedTable.latestVersion(table).get
     val usersAfter1 = graft.operators.VersionedTable.read(spark, table)
       .count()
     // run 2: new files arrive; same checkpoint picks up only the delta
     ev.filter(col("event_id") % 2 === 1).repartition(2)
       .write.mode("append").json(src)
-    graft.streaming.Streams.mergeStream(spark, src, schema, table,
+    Streams.awaitDone(Streams.mergeStream(spark, src, schema, table,
       "user_id", "ts", "event_id", ckpt,
-      payloadCols = Seq("event_id", "ts", "user_id"))
-      .awaitTermination(60000)
+      payloadCols = Seq("event_id", "ts", "user_id")), 60000)
     // more commits happened, each marked with its batch id
     assert(graft.operators.VersionedTable.latestVersion(table).get > v1)
     val ops = graft.operators.VersionedTable.operations(table)
@@ -302,9 +316,9 @@ class StreamsSpec extends SparkSpec {
     ev.repartition(4).write.mode("overwrite").json(src)
     val schema = StructType(Seq(StructField("event_id", LongType),
       StructField("ts", LongType), StructField("user_id", LongType)))
-    Streams.appendStream(spark, src, schema, table, ckpt,
+    Streams.awaitDone(Streams.appendStream(spark, src, schema, table, ckpt,
       payloadCols = Seq("event_id", "ts", "user_id"),
-      maxFilesPerTrigger = 2).awaitTermination(60000)
+      maxFilesPerTrigger = 2), 60000)
     val ops = graft.operators.VersionedTable.operations(table)
     assert(ops.nonEmpty && ops.forall(_.startsWith("STREAM_APPEND[batch=")))
     assert(ops.distinct.size == ops.size)
@@ -441,8 +455,8 @@ class StreamsSpec extends SparkSpec {
       val idx = Files.createTempDirectory("graft_sdi_idx").toString
       val prs = Files.createTempDirectory("graft_sdi_prs").toString
       val ckpt = Files.createTempDirectory("graft_sdi_ck").toString
-      Streams.indexedDedupStream(spark, src, schema, s"$idx/i", s"$prs/p",
-        ckpt, maxFilesPerTrigger = maxFiles).awaitTermination(60000)
+      Streams.awaitDone(Streams.indexedDedupStream(spark, src, schema,
+        s"$idx/i", s"$prs/p", ckpt, maxFilesPerTrigger = maxFiles), 60000)
       spark.read.parquet(s"$prs/p").select("id_a", "id_b", "est_jaccard")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .toSet
@@ -475,8 +489,8 @@ class StreamsSpec extends SparkSpec {
     def run(maxFiles: Int): Set[(Long, Long, Long)] = {
       val out = Files.createTempDirectory("graft_sap_out").toString + "/o"
       val ckpt = Files.createTempDirectory("graft_sap_ck").toString
-      Streams.annProbeStream(spark, src, schema, idx, out, ckpt,
-        maxFilesPerTrigger = maxFiles).awaitTermination(60000)
+      Streams.awaitDone(Streams.annProbeStream(spark, src, schema, idx, out,
+        ckpt, maxFilesPerTrigger = maxFiles), 60000)
       spark.read.parquet(out).select("query_id", "neighbor_id", "rank")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .toSet
@@ -537,8 +551,8 @@ class StreamsSpec extends SparkSpec {
       val cnt = Files.createTempDirectory("graft_shh_cnt").toFile.getPath + "/c"
       val ckpt = Files.createTempDirectory("graft_shh_ck").toFile.getPath
       docs.repartition(4, col("doc_id")).write.mode("overwrite").json(src)
-      Streams.tokenCountStream(spark, src, schema, cnt, ckpt,
-        maxFilesPerTrigger = maxFiles).awaitTermination(60000)
+      Streams.awaitDone(Streams.tokenCountStream(spark, src, schema, cnt, ckpt,
+        maxFilesPerTrigger = maxFiles), 60000)
       (cnt, Streams.heavyHittersFromCounts(spark, cnt, minCount = 1L)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
     }
@@ -582,8 +596,8 @@ class StreamsSpec extends SparkSpec {
       val sg = Files.createTempDirectory("graft_sid_sig").toFile
         .getPath + "/s"
       val ckpt = Files.createTempDirectory("graft_sid_ck").toFile.getPath
-      Streams.imageHashStream(spark, src, sg, ckpt,
-        maxFilesPerTrigger = maxFiles).awaitTermination(120000)
+      Streams.awaitDone(Streams.imageHashStream(spark, src, sg, ckpt,
+        maxFilesPerTrigger = maxFiles), 120000)
       Streams.imageDedupFromShards(spark, sg).collect()
         .map(r => (r.getAs[Long]("media_id"), r.getAs[String]("ahash"),
           r.getAs[Long]("canonical_id"), r.getAs[Long]("group_size"),
@@ -618,9 +632,9 @@ class StreamsSpec extends SparkSpec {
       val md = Files.createTempDirectory("graft_sxp_md").toFile.getPath + "/m"
       val ckpt = Files.createTempDirectory("graft_sxp_ck").toFile.getPath
       ev.repartition(4, col("event_id")).write.mode("overwrite").json(src)
-      Streams.expectationsStream(spark, src, schema, md,
+      Streams.awaitDone(Streams.expectationsStream(spark, src, schema, md,
         graft.operators.Expectations.EventSuite, ckpt,
-        maxFilesPerTrigger = maxFiles).awaitTermination(60000)
+        maxFilesPerTrigger = maxFiles), 60000)
       Streams.expectationsFromShards(spark, md).collect()
         .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     }
@@ -654,8 +668,8 @@ class StreamsSpec extends SparkSpec {
       val rd = Files.createTempDirectory("graft_sri_rd").toFile.getPath + "/r"
       val ckpt = Files.createTempDirectory("graft_sri_ck").toFile.getPath
       fact.repartition(4, col("fk_id")).write.mode("overwrite").json(src)
-      Streams.refIntegrityStream(spark, src, schema, rd, rels, ckpt,
-        maxFilesPerTrigger = maxFiles).awaitTermination(60000)
+      Streams.awaitDone(Streams.refIntegrityStream(spark, src, schema, rd,
+        rels, ckpt, maxFilesPerTrigger = maxFiles), 60000)
       Streams.refIntegrityFromShards(spark, rd).collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
           r.getLong(3))).toSet
@@ -680,8 +694,8 @@ class StreamsSpec extends SparkSpec {
       val prf = Files.createTempDirectory("graft_spf_p").toFile.getPath + "/p"
       val ckpt = Files.createTempDirectory("graft_spf_ck").toFile.getPath
       rows.repartition(4, col("id")).write.mode("overwrite").json(src)
-      Streams.profileStream(spark, src, schema, prf, ckpt,
-        maxFilesPerTrigger = maxFiles).awaitTermination(60000)
+      Streams.awaitDone(Streams.profileStream(spark, src, schema, prf, ckpt,
+        maxFilesPerTrigger = maxFiles), 60000)
       Streams.profileFromShards(spark, prf).collect()
         .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
           r.get(3), r.get(4), r.get(5), r.get(6))).toMap
@@ -729,8 +743,8 @@ class StreamsSpec extends SparkSpec {
       val ckpt = Files.createTempDirectory("graft_scs_ck").toFile.getPath
       emb.select("vec_id", "embedding").repartition(4)
         .write.mode("overwrite").parquet(src)
-      Streams.cellStatsStream(spark, src, schema, cents, cnt, ckpt,
-        maxFilesPerTrigger = maxFiles).awaitTermination(60000)
+      Streams.awaitDone(Streams.cellStatsStream(spark, src, schema, cents,
+        cnt, ckpt, maxFilesPerTrigger = maxFiles), 60000)
       canon(Streams.cellStatsFromShards(spark, cnt, nlist = 16))
     }
     assert(run(1) == oneShot, "shard merge differs from one-shot audit")
@@ -759,8 +773,8 @@ class StreamsSpec extends SparkSpec {
       val ckpt = Files.createTempDirectory("graft_smx_ck").toFile.getPath
       incoming.select("doc_id", "lang", "source").repartition(4)
         .write.mode("overwrite").json(src)
-      Streams.mixStream(spark, src, schema, cel, ckpt,
-        maxFilesPerTrigger = maxFiles).awaitTermination(60000)
+      Streams.awaitDone(Streams.mixStream(spark, src, schema, cel, ckpt,
+        maxFilesPerTrigger = maxFiles), 60000)
       canon(Streams.mixDriftVsBase(spark, cel, docs))
     }
     assert(run(1) == oneShot, "shard merge differs from the batch drift")
@@ -790,8 +804,8 @@ class StreamsSpec extends SparkSpec {
       val ckpt = Files.createTempDirectory("graft_cur_ck").toFile.getPath
       // one doc per file so maxFiles controls the batch split
       docs.repartition(4, col("doc_id")).write.mode("overwrite").json(src)
-      Streams.curationStream(spark, src, schema, out, ckpt,
-        maxFilesPerTrigger = maxFiles).awaitTermination(60000)
+      Streams.awaitDone(Streams.curationStream(spark, src, schema, out, ckpt,
+        maxFilesPerTrigger = maxFiles), 60000)
       spark.read.parquet(out)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .toSet
@@ -823,8 +837,8 @@ class StreamsSpec extends SparkSpec {
       val cnt = Files.createTempDirectory("graft_sta_cnt").toFile.getPath + "/c"
       val ckpt = Files.createTempDirectory("graft_sta_ck").toFile.getPath
       ev.repartition(4).write.mode("overwrite").json(src)
-      Streams.hourlyCountStream(spark, src, schema, cnt, ckpt,
-        maxFilesPerTrigger = maxFiles).awaitTermination(60000)
+      Streams.awaitDone(Streams.hourlyCountStream(spark, src, schema, cnt, ckpt,
+        maxFilesPerTrigger = maxFiles), 60000)
       canon(Streams.anomalyFromShards(spark, cnt))
     }
     assert(run(1) == oneShot, "1-file triggers differ from batch anomaly")
@@ -836,8 +850,8 @@ class StreamsSpec extends SparkSpec {
     val cnt2 = Files.createTempDirectory("graft_stx_cnt").toFile.getPath + "/c"
     val ck2 = Files.createTempDirectory("graft_stx_ck").toFile.getPath
     ev.repartition(4).write.mode("overwrite").json(src2)
-    Streams.hourlyCountStream(spark, src2, schema, cnt2, ck2,
-      maxFilesPerTrigger = 2).awaitTermination(60000)
+    Streams.awaitDone(Streams.hourlyCountStream(spark, src2, schema, cnt2, ck2,
+      maxFilesPerTrigger = 2), 60000)
     assert(canon(Streams.crosscorrFromShards(spark, cnt2)) == xc,
       "crosscorr from merged shards differs from the batch matrix")
     // a retried batch id overwrites its own count shard
@@ -869,10 +883,10 @@ class StreamsSpec extends SparkSpec {
       val out = Files.createTempDirectory("graft_sas_out").toFile.getPath + "/o"
       val ckpt = Files.createTempDirectory("graft_sas_ck").toFile.getPath
       left.repartition(4, col("event_id")).write.mode("overwrite").json(src)
-      Streams.asofEnrichStream(spark, src, schema, right, out, ckpt,
-        key = "user_id", tsCol = "ts",
+      Streams.awaitDone(Streams.asofEnrichStream(spark, src, schema, right,
+        out, ckpt, key = "user_id", tsCol = "ts",
         rightCols = Seq("event_id", "value"),
-        maxFilesPerTrigger = maxFiles).awaitTermination(60000)
+        maxFilesPerTrigger = maxFiles), 60000)
       canon(spark.read.parquet(out)
         .select("event_id", "user_id", "ts", "value",
           "matched_event_id", "matched_value"))
@@ -904,9 +918,9 @@ class StreamsSpec extends SparkSpec {
       val ckpt = Files.createTempDirectory("graft_scm_ck").toFile.getPath
       docs.select("doc_id", "text").repartition(4)
         .write.mode("overwrite").json(src)
-      Streams.countMinStream(spark, src, schema, st, ckpt,
+      Streams.awaitDone(Streams.countMinStream(spark, src, schema, st, ckpt,
         width = 64, depth = 4, probes = probes,
-        maxFilesPerTrigger = maxFiles).awaitTermination(60000)
+        maxFilesPerTrigger = maxFiles), 60000)
       canon(Streams.countMinFromShards(spark, st, width = 64, depth = 4,
         probes = probes))
     }
