@@ -44,8 +44,9 @@ final class ConstraintViolationException(msg: String)
   * lookups with zero query-time footer I/O.
   *
   *  - MERGE / UPDATE / DELETE rewrite ONLY the files that contain
-  *    touched rows (found by an exact, column-pruned scan of the key /
-  *    condition columns plus `_metadata.file_path`) and re-link every
+  *    touched rows (found by a column-pruned touch scan of the key /
+  *    condition columns plus `_metadata.file_path`; keyed verbs filter
+  *    it on their key census, see [[keyedTouch]]) and re-link every
   *    untouched file. A one-row MERGE into a 100 TB table costs
   *    O(delta + one file rewrite), never O(table).
   *  - RESTORE re-links an old manifest: zero data written.
@@ -129,6 +130,21 @@ object VersionedTable {
 
   def latestVersion(path: String): Option[Int] = versions(path).lastOption
 
+  /** The latest committed version; throws when there is none. */
+  private[graft] def latest(path: String): Int = latestVersion(path)
+    .getOrElse(throw new IllegalArgumentException(
+      s"no committed versions at $path"))
+
+  /** `asOf` (default: the latest version), checked readable:
+    * committed, and not marked unreadable by [[vacuum]]. */
+  private def readableVersion(path: String, asOf: Option[Int]): Int = {
+    val v = asOf.getOrElse(latest(path))
+    require(versions(path).contains(v), s"version $v not committed at $path")
+    require(!vacuumedVersions(path).contains(v),
+      s"version $v was vacuumed at $path")
+    v
+  }
+
   /** Versions marked unreadable by [[vacuum]] (history stays listable). */
   def vacuumedVersions(path: String): Set[Int] = {
     val f = vacuumedFile(path)
@@ -211,78 +227,44 @@ object VersionedTable {
     sb.toString
   }
 
+  /** `,"field":{…}` for a non-empty map, keys sorted ("" when empty). */
+  private def jsonObj[T](field: String, m: Map[String, T])
+                        (value: T => String): String =
+    if (m.isEmpty) ""
+    else m.toSeq.sortBy(_._1).map { case (k, x) =>
+      s""""${jsonEscape(k)}":${value(x)}"""
+    }.mkString(s""","$field":{""", ",", "}")
+
+  private def jsonStr(x: String) = s""""${jsonEscape(x)}""""
+
   private def fileEntryJson(e: FileEntry): String = {
     val dv = e.dv.fold("")(d => s""","dv":"$d"""")
-    val stats =
-      if (e.stats.isEmpty) ""
-      else e.stats.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
-        s""""${jsonEscape(c)}":[$lo,$hi]"""
-      }.mkString(""","stats":{""", ",", "}")
-    val part =
-      if (e.part.isEmpty) ""
-      else e.part.toSeq.sortBy(_._1).map { case (c, v) =>
-        s""""${jsonEscape(c)}":"${jsonEscape(v)}""""
-      }.mkString(""","part":{""", ",", "}")
-    val bloom =
-      if (e.bloom.isEmpty) ""
-      else e.bloom.toSeq.sortBy(_._1).map { case (c, v) =>
-        s""""${jsonEscape(c)}":"${jsonEscape(v)}""""
-      }.mkString(""","bloom":{""", ",", "}")
-    val sstats =
-      if (e.sstats.isEmpty) ""
-      else e.sstats.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
-        s""""${jsonEscape(c)}":["${jsonEscape(lo)}","${jsonEscape(hi)}"]"""
-      }.mkString(""","sstats":{""", ",", "}")
+    val stats = jsonObj("stats", e.stats) { case (lo, hi) => s"[$lo,$hi]" }
+    val sstats = jsonObj("sstats", e.sstats) { case (lo, hi) =>
+      s"[${jsonStr(lo)},${jsonStr(hi)}]" }
     s"""{"name":"${e.name}"$dv,"rows":${e.rows},"phys":${e.phys},""" +
-      s""""bytes":${e.bytes}$stats$part$bloom$sstats}"""
+      s""""bytes":${e.bytes}$stats${jsonObj("part", e.part)(jsonStr)}""" +
+      s"""${jsonObj("bloom", e.bloom)(jsonStr)}$sstats}"""
   }
 
-  private def parseFileEntry(n: JsonNode): FileEntry = {
-    def strMap(field: String): Map[String, String] = {
-      val node = n.get(field)
-      if (node == null) Map.empty
-      else {
-        val it = node.fields()
-        val b = Map.newBuilder[String, String]
-        while (it.hasNext) {
-          val e = it.next(); b += e.getKey -> e.getValue.asText
-        }
-        b.result()
-      }
+  /** `node.field` as a map, each value read by `value` (empty when
+    * the field is absent). */
+  private def mapOf[T](node: JsonNode, field: String)
+                      (value: JsonNode => T): Map[String, T] =
+    Option(node.get(field)).fold(Map.empty[String, T]) { n =>
+      val it = n.fields()
+      val b = Map.newBuilder[String, T]
+      while (it.hasNext) { val e = it.next(); b += e.getKey -> value(e.getValue) }
+      b.result()
     }
-    val stats = {
-      val node = n.get("stats")
-      if (node == null) Map.empty[String, (Double, Double)]
-      else {
-        val it = node.fields()
-        val b = Map.newBuilder[String, (Double, Double)]
-        while (it.hasNext) {
-          val e = it.next()
-          b += e.getKey ->
-            (e.getValue.get(0).asDouble, e.getValue.get(1).asDouble)
-        }
-        b.result()
-      }
-    }
-    val sstats = {
-      val node = n.get("sstats")
-      if (node == null) Map.empty[String, (String, String)]
-      else {
-        val it = node.fields()
-        val b = Map.newBuilder[String, (String, String)]
-        while (it.hasNext) {
-          val e = it.next()
-          b += e.getKey ->
-            (e.getValue.get(0).asText, e.getValue.get(1).asText)
-        }
-        b.result()
-      }
-    }
+
+  private def parseFileEntry(n: JsonNode): FileEntry =
     FileEntry(n.get("name").asText,
       Option(n.get("dv")).map(_.asText),
       n.get("rows").asLong, n.get("phys").asLong, n.get("bytes").asLong,
-      stats, strMap("part"), strMap("bloom"), sstats)
-  }
+      mapOf(n, "stats")(x => (x.get(0).asDouble, x.get(1).asDouble)),
+      mapOf(n, "part")(_.asText), mapOf(n, "bloom")(_.asText),
+      mapOf(n, "sstats")(x => (x.get(0).asText, x.get(1).asText)))
 
   private def parseEntry(path: String, v: Int): LogEntry = {
     val root = mapper.readTree(logLine(path, v))
@@ -290,15 +272,7 @@ object VersionedTable {
       Option(root.get(field)).map { arr =>
         (0 until arr.size).map(i => parseFileEntry(arr.get(i)))
       }
-    def strMap(field: String): Map[String, String] =
-      Option(root.get(field)).fold(Map.empty[String, String]) { node =>
-        val it = node.fields()
-        val b = Map.newBuilder[String, String]
-        while (it.hasNext) {
-          val e = it.next(); b += e.getKey -> e.getValue.asText
-        }
-        b.result()
-      }
+    def strMap(field: String) = mapOf(root, field)(_.asText)
     val props = TableProps(strMap("constraints"), strMap("colmap"),
       Option(root.get("used_phys")).map(a =>
         (0 until a.size).map(a.get(_).asText).toSet).getOrElse(Set.empty),
@@ -348,24 +322,18 @@ object VersionedTable {
       case None =>
         s""""add":${add.map(fileEntryJson).mkString("[", ",", "]")}"""
     }
-    def strMapJson(field: String, m: Map[String, String]): String =
-      if (m.isEmpty) ""
-      else m.toSeq.sortBy(_._1).map { case (k, x) =>
-        s""""${jsonEscape(k)}":"${jsonEscape(x)}""""
-      }.mkString(s""""$field":{""", ",", "},")
-    val propsJson = strMapJson("constraints", props.constraints) +
-      strMapJson("colmap", props.colmap) +
-      strMapJson("tblprops", props.tbl) +
+    val propsJson = jsonObj("constraints", props.constraints)(jsonStr) +
+      jsonObj("colmap", props.colmap)(jsonStr) +
+      jsonObj("tblprops", props.tbl)(jsonStr) +
       (if (props.usedPhys.isEmpty) ""
-       else props.usedPhys.toSeq.sorted
-         .map(n => s""""${jsonEscape(n)}"""")
-         .mkString(""""used_phys":[""", ",", "],"))
+       else props.usedPhys.toSeq.sorted.map(jsonStr)
+         .mkString(""","used_phys":[""", ",", "]"))
     val entry =
       s"""{"version":$v,"operation":"${jsonEscape(operation)}","num_rows":$rows,""" +
         s""""committed_at":"${java.time.Instant.now()}",""" +
-        s""""schema":"${jsonEscape(schema.json)}",""" +
+        s""""schema":"${jsonEscape(schema.json)}"""" +
         propsJson +
-        s""""remove":$removeJson,$tailJson}"""
+        s""","remove":$removeJson,$tailJson}"""
     Files.write(logDir(path).resolve(f"$v%06d.json"),
       java.util.List.of(entry), StandardOpenOption.CREATE_NEW)
   }
@@ -542,6 +510,20 @@ object VersionedTable {
     }
   }
 
+  /** One shared Hadoop conf for footer opens: `new Configuration()`
+    * re-parses core-default/core-site XML on every instantiation
+    * (several ms), and footers are opened once per committed file.
+    * Routed through the fork-free raw local FS like every other graft
+    * file op. READ-ONLY after construction: concurrent footer reads
+    * share it, so a caller needing other settings must copy it
+    * (`new Configuration(footerHadoopConf)`), never mutate it. */
+  private lazy val footerHadoopConf: org.apache.hadoop.conf.Configuration = {
+    val c = new org.apache.hadoop.conf.Configuration()
+    c.set("fs.file.impl",
+      classOf[graft.sources.NoForkRawLocalFileSystem].getName)
+    c
+  }
+
   /** Exact row count, per-numeric-column [min, max], AND
     * per-STRING-column [min, max] from the parquet footer — no data
     * pages read, no extra Spark job (the write already happened; this
@@ -552,18 +534,6 @@ object VersionedTable {
     * orders binary stats by unsigned UTF-8 byte, readers compare
     * UTF-16 code units — the two agree on ASCII and can diverge
     * beyond it, and a diverging bound would prune wrongly. */
-  /** One shared Hadoop conf for footer opens: `new Configuration()`
-    * re-parses core-default/core-site XML on every instantiation
-    * (several ms), and footers are opened once per committed file —
-    * the conf never changes between opens. Routed through the
-    * fork-free raw local FS like every other graft file op. */
-  private lazy val footerHadoopConf: org.apache.hadoop.conf.Configuration = {
-    val c = new org.apache.hadoop.conf.Configuration()
-    c.set("fs.file.impl",
-      classOf[graft.sources.NoForkRawLocalFileSystem].getName)
-    c
-  }
-
   private def footerInfo(p: Path)
       : (Long, Map[String, (Double, Double)], Map[String, (String, String)]) = {
     footerReads.incrementAndGet()
@@ -607,7 +577,11 @@ object VersionedTable {
     }
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(p.toUri), footerHadoopConf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    // the read options must carry the shared conf too: the one-arg
+    // open builds its options over a fresh conf, which re-parses the
+    // default XML resources on every footer
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in,
+      org.apache.parquet.HadoopReadOptions.builder(footerHadoopConf).build())
     try {
       val rows = r.getRecordCount
       val blocks = r.getFooter.getBlocks
@@ -684,7 +658,12 @@ object VersionedTable {
     * manifest entry while the data files keep every column (the
     * partition columns are duplicated under a `_gp_` alias for the
     * directory layout only), so reads need no value reconstruction.
-    * Returns the manifest entries, stats included. */
+    * The write goes through [[GraftParquetFormat]]: when the table
+    * declares bloom columns, each task builds its files' sidecars
+    * from the rows it writes, so indexing costs no read-back and no
+    * extra job. This write job is the only data-sized query of a
+    * commit besides its touch discovery. Returns the manifest
+    * entries, stats and sidecar references included. */
   private def writeDataFiles(df: DataFrame, path: String, v: Int,
                              tag: String = "c",
                              partitionBy: Seq[String] = Nil,
@@ -698,15 +677,15 @@ object VersionedTable {
       else df.select(df.columns.toIndexedSeq.map(c =>
         col(c).as(props.phys(c))): _*)
     val physBy = partitionBy.map(props.phys)
-    if (physBy.isEmpty)
-      physDf.write.mode("overwrite").parquet(stage.toString)
-    else {
-      val dup = physBy.foldLeft(physDf)((d, c) =>
-        d.withColumn(s"_gp_$c", col(c)))
-      dup.write.mode("overwrite")
-        .partitionBy(physBy.map("_gp_" + _): _*)
-        .parquet(stage.toString)
-    }
+    val blCols = bloomConfig(props).map(props.phys)
+      .filter(physDf.columns.contains)
+    physBy.foldLeft(physDf)((d, c) => d.withColumn(s"_gp_$c", col(c)))
+      .write.mode("overwrite")
+      .partitionBy(physBy.map("_gp_" + _): _*)
+      .format(classOf[GraftParquetFormat].getName)
+      .option(GraftParquetFormat.ColumnsOpt, blCols.mkString(","))
+      .option(GraftParquetFormat.FppOpt, bloomFpp(props))
+      .save(stage.toString)
     Files.createDirectories(poolDir(path))
     def walk(dir: java.io.File,
              part: Map[String, String]): Seq[(java.io.File, Map[String, String])] =
@@ -718,25 +697,41 @@ object VersionedTable {
           } else if (f.getName.endsWith(".parquet")) Seq((f, part))
           else Nil
         }
-    val parts = walk(stage.toFile, Map.empty)
-    val out = parts.zipWithIndex.map { case ((f, pv), i) =>
-      val name = f"$tag$v%06d-$i%03d-${f.getName}"
-      val dst = poolDir(path).resolve(name)
-      Files.move(f.toPath, dst, StandardCopyOption.ATOMIC_MOVE)
-      val (rows, stats, sstats) = footerInfo(dst)
-      FileEntry(name, None, rows, rows, Files.size(dst), stats, pv,
-        sstats = sstats)
+    val uid = java.util.UUID.randomUUID.toString.take(8)
+    val out = walk(stage.toFile, Map.empty).zipWithIndex.map {
+      case ((f, pv), i) =>
+        val name = f"$tag$v%06d-$i%03d-${f.getName}"
+        val dst = poolDir(path).resolve(name)
+        Files.move(f.toPath, dst, StandardCopyOption.ATOMIC_MOVE)
+        val bloom = blCols.zipWithIndex.flatMap { case (c, j) =>
+          val sc = Paths.get(GraftParquetFormat.sidecar(f.getPath, j))
+          if (!Files.exists(sc)) None // zero-row file: stays unindexed
+          else {
+            val bn = f"bl$v%06d-$i%03d-$uid-$j.bloom"
+            Files.move(sc, poolDir(path).resolve(bn),
+              StandardCopyOption.ATOMIC_MOVE)
+            Some(c -> bn)
+          }
+        }.toMap
+        val (rows, stats, sstats) = footerInfo(dst)
+        FileEntry(name, None, rows, rows, Files.size(dst), stats, pv,
+          bloom, sstats)
     }
     destroy(stage.toString)
-    // bloom index maintenance (Delta's write-path indexing): when the
-    // table declares indexed columns, the commit's own new files get
-    // their sidecars here — O(new data), regardless of table size
-    val blCols = bloomConfig(props).map(props.phys)
-      .filter(physDf.columns.contains)
-    if (blCols.isEmpty) out
-    else buildBloomSidecars(df.sparkSession, path, v, out, blCols,
-      bloomFpp(props))
+    out
   }
+
+  /** `props` with physical names for NEW logical columns `names`
+    * committed at version `v`: the logical name itself, or `name_vN`
+    * when an earlier (dropped) column used it — the usedPhys tombstone
+    * keeps a new column from reading a dropped column's bytes. */
+  private def withNewColumns(props: TableProps, names: Seq[String],
+                             v: Int): TableProps =
+    names.foldLeft(props) { (p, c) =>
+      val phys = if (p.usedPhys.contains(c)) s"${c}_v$v" else c
+      p.copy(colmap = if (phys == c) p.colmap else p.colmap + (c -> phys),
+        usedPhys = p.usedPhys + phys)
+    }
 
   /** Write `df` as the next version (full snapshot — ingest/CTAS
     * shape). Returns the new version number. The exact committed row
@@ -798,8 +793,7 @@ object VersionedTable {
     * survive, and the pre-truncate snapshot stays time-travelable
     * until vacuumed. Zero data I/O at any table size. */
   def truncate(path: String): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
+    val v = latest(path)
     commitActions(path, "TRUNCATE", v,
       manifestEntries(path, v).map(_.name).toSet, Nil, schemaOf(path, v))
   }
@@ -858,9 +852,7 @@ object VersionedTable {
     val baseProps = propsOf(path, baseV)
     var attempts = 0
     while (attempts < 1000) {
-      val latest = latestVersion(path).getOrElse(
-        throw new IllegalArgumentException(
-          s"no committed versions at $path"))
+      val latest = this.latest(path)
       if (latest != baseV) {
         // a METADATA change (rename/drop/constraint/schema) cannot be
         // rebased onto concurrent commits, and a data commit planned
@@ -1053,11 +1045,7 @@ object VersionedTable {
     * sharing — Delta's post-VACUUM retention contract. */
   def read(spark: SparkSession, path: String,
            asOf: Option[Int] = None): DataFrame = {
-    val v = asOf.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    require(versions(path).contains(v), s"version $v not committed at $path")
-    require(!vacuumedVersions(path).contains(v),
-      s"version $v was vacuumed at $path")
+    val v = readableVersion(path, asOf)
     readFiles(spark, path, manifest(path, v).map(_._1), schemaOf(path, v),
       v, propsOf(path, v))
   }
@@ -1070,117 +1058,167 @@ object VersionedTable {
         resolvePoolFile(path, e.name).isDefined &&
           e.dv.forall(d => resolvePoolFile(path, d).isDefined))
 
-  /** Files of the current version that contain at least one row
-    * satisfying `hit` — an EXACT shortlist: the scan reads only the
-    * columns `hit` needs (Catalyst prunes the rest) plus the file-path
-    * metadata column, and pushed-down predicates skip row groups via
-    * parquet min-max stats on clustered tables. Driver traffic is one
-    * row per touched FILE, never per row. */
+  /** The TOUCH SCAN: per-file counts of version `v`'s rows that
+    * satisfy `hit`, over the `candidates` shortlist (every file when
+    * None). The scan reads only the columns `hit` needs (Catalyst
+    * prunes the rest) plus the file-name lineage column, and pushed
+    * predicates skip row groups on clustered tables. It is ONE job
+    * with no shuffle: each task counts its own rows per file and the
+    * driver adds the partial maps, so driver traffic is one entry per
+    * touched FILE per task, never per row. Files without a hit are
+    * absent; the counts' sum is the number of rows `hit` selects
+    * (UPDATE's affected-row count). */
   private[graft] def touchedFiles(spark: SparkSession, path: String, v: Int,
                            schema: StructType,
                            hit: DataFrame => DataFrame,
                            props: TableProps = emptyProps,
                            candidates: Option[Set[String]] = None)
-      : Set[String] = {
-    val all = manifestEntries(path, v)
-    // bloom pre-prune (when available): the exact semi-join scan runs
-    // only over files whose index ADMITS some key — false positives
-    // die in this scan, so pruning never causes a spurious rewrite
-    val files = candidates.fold(all)(c => all.filter(e => c(e.name)))
-    // debug oracle (judge r12): a bloom FALSE NEGATIVE here is the
-    // exact signature of a duplicated-key merge — a file holding a
-    // matching row gets re-linked while the rewrite appends the new
-    // row. Under the flag, recompute the touch set WITHOUT pruning
-    // and fail loudly if pruning dropped a truly-touched file.
-    if (candidates.isDefined && all.size > 1 &&
-        spark.conf.getOption("spark.graft.debug.verifyTouchSet")
-          .contains("true")) {
-      val exact = {
-        val cur = readEntries(spark, path, all, schema, v,
-          lineage = true, props = props)
-        hit(cur).select("_graft_file").distinct().collect()
-          .map(_.getString(0)).toSet
-      }
-      val admitted = files.map(_.name).toSet
-      val missed = exact -- admitted
-      if (missed.nonEmpty) throw new IllegalStateException(
-        s"BLOOM FALSE NEGATIVE at $path v$v: pruning dropped truly-" +
-          s"touched files ${missed.mkString(", ")} (admitted " +
-          s"${admitted.size}/${all.size})")
-    }
-    if (files.isEmpty) Set.empty
-    // a 1-file manifest has nothing to prune — skip the discovery job
-    // (the rewrite applies the row-level predicate anyway, so content
-    // is identical; only a no-match commit loses a re-link, and THAT
-    // table is one file big)
-    else if (all.size == 1) Set(all.head.name)
+      : Map[String, Long] = {
+    val files = manifestEntries(path, v)
+      .filter(e => candidates.forall(_(e.name)))
+    if (files.isEmpty) Map.empty
     else {
-      val cur = readEntries(spark, path, files, schema, v,
-        lineage = true, props = props)
-      hit(cur).select("_graft_file").distinct().collect()
-        .map(_.getString(0)).toSet
+      import spark.implicits._
+      hit(readEntries(spark, path, files, schema, v, lineage = true,
+          props = props))
+        .select("_graft_file").as[String]
+        .mapPartitions { it =>
+          val m = scala.collection.mutable.HashMap[String, Long]()
+          it.foreach(f => m(f) = m.getOrElse(f, 0L) + 1L)
+          m.iterator
+        }.collect().groupMapReduce(_._1)(_._2)(_ + _)
     }
   }
 
-  /** Keys-per-merge ceiling for the bloom-assisted touched-file
-    * pre-prune: batches with more distinct keys fall back to the
-    * plain column-pruned scan (the probe is K bloom tests per
-    * unmatched file — bounded here so the metadata pass can never
-    * rival the scan it replaces). Var so specs can force the
-    * fallback. */
+  /** Distinct-key ceiling of a [[keyCensus]]: a source with more
+    * distinct key tuples falls back to the semi-join touch scan with
+    * no bloom pre-prune (the probe is K bloom tests per file and the
+    * census ships K hashes to the driver — bounded here so the
+    * metadata pass can never rival the scan it replaces). Var so
+    * specs can force the fallback. */
   private[operators] var bloomMergeProbeCapKeys: Int = 1 << 16
 
+  /** What one keyed commit needs to know about its source keys, from
+    * ONE aggregate over their distinct non-null tuples: `xxhash64` of
+    * each tuple (the touch scan's filter), of each column's values
+    * (the bloom probe's, hashed as the index hashed them), and
+    * whether some tuple occurs more than once (MERGE's ambiguity
+    * guard). */
+  private final case class KeyCensus(tuples: Array[Long],
+      columns: Seq[(String, Array[Long])], dup: Boolean)
+
+  /** The [[KeyCensus]] of `keyFrame` (columns named as the table's
+    * `keys`), or None over [[bloomMergeProbeCapKeys]] distinct tuples
+    * or when a key is typed unlike the table column (the hash is
+    * type-sensitive, so a census of such keys could miss files). NULL
+    * keys match nothing in a MERGE, so the census drops them. */
+  private def keyCensus(keyFrame: DataFrame, keys: Seq[String],
+                        schema: StructType): Option[KeyCensus] = {
+    def typeOf(s: StructType, k: String) =
+      s.fields.find(_.name == k).map(_.dataType)
+    if (keys.isEmpty || !keys.forall(k => typeOf(schema, k).isDefined &&
+        typeOf(schema, k) == typeOf(keyFrame.schema, k))) return None
+    val cap = bloomMergeProbeCapKeys
+    val rows = keyFrame.filter(keys.map(col(_).isNotNull).reduce(_ && _))
+      .groupBy(keys.map(col): _*).agg((count(lit(1)) > 1).as("_dup"))
+      .select((xxhash64(keys.map(col): _*) +:
+        keys.map(k => xxhash64(col(k)))) :+ col("_dup"): _*)
+      // one task reads the aggregated partitions in turn, so the
+      // capped collect is one job (no take scale-up rounds) and stops
+      // aggregating once the cap is passed
+      .coalesce(1).limit(cap + 1).collect()
+    if (rows.length > cap) None
+    else Some(KeyCensus(rows.map(_.getLong(0)),
+      keys.zipWithIndex.map { case (k, i) =>
+        k -> rows.map(_.getLong(i + 1)).distinct },
+      rows.exists(_.getBoolean(keys.size + 1))))
+  }
+
+  /** Touch discovery for EVERY keyed commit (MERGE, key DELETE and the
+    * upsert verbs): the files of version `v` holding a row whose key
+    * tuple occurs in `keyFrame` (source key columns named as the
+    * table's `keys`; duplicates allowed), plus whether the source may
+    * carry duplicate key tuples. One [[keyCensus]] feeds the bloom
+    * pre-prune ([[bloomCandidates]]) and a touch scan filtered on
+    * `xxhash64(keys) IN census` — no join with the key frame. A hash
+    * collision can only ADD a file, which the row-level rewrite passes
+    * through unchanged; a truly touched file is never missed. Without
+    * a census (over the cap, or a key typed unlike the table) the
+    * scan semi-joins the key frame, unpruned. Under
+    * `spark.graft.debug.verifyTouchSet=true` the exact semi-join touch
+    * set is recomputed over every file, and a census that dropped a
+    * truly touched file fails the commit loudly — the signature of
+    * that bug is a merged key left behind in a re-linked file. */
+  private[graft] def keyedTouch(spark: SparkSession, path: String, v: Int,
+                                schema: StructType, props: TableProps,
+                                keyFrame: DataFrame, keys: Seq[String])
+      : (Set[String], Boolean) = {
+    val census = keyCensus(keyFrame, keys, schema)
+    val semi: DataFrame => DataFrame = _.join(keyFrame, keys, "left_semi")
+    val files = census match {
+      case Some(c) if c.tuples.isEmpty => Set.empty[String]
+      case Some(c) =>
+        val inCensus = org.apache.spark.sql.graft.GraftBridge.column(
+          org.apache.spark.sql.catalyst.expressions.InSet(
+            org.apache.spark.sql.graft.GraftBridge.expression(
+              xxhash64(keys.map(col): _*)), c.tuples.toSet[Any]))
+        touchedFiles(spark, path, v, schema, _.filter(inCensus), props,
+          bloomCandidates(spark, path, v, props, c.columns)).keySet
+      case None => touchedFiles(spark, path, v, schema, semi, props).keySet
+    }
+    if (census.isDefined && spark.conf
+        .getOption("spark.graft.debug.verifyTouchSet").contains("true")) {
+      val missed =
+        touchedFiles(spark, path, v, schema, semi, props).keySet -- files
+      if (missed.nonEmpty) throw new IllegalStateException(
+        s"TOUCH CENSUS FALSE NEGATIVE at $path v$v: the census touch " +
+          s"set ${files.size} files missed truly-touched files " +
+          missed.mkString(", "))
+    }
+    (files, census.forall(_.dup))
+  }
+
   /** MERGE-side dynamic file pruning from the bloom index: probe each
-    * file's sidecars with the update batch's hashed key sets and
-    * return the files that MIGHT contain a matching key tuple — the
-    * exact touch scan then reads only those, so a small CDC batch
-    * against a 100 TB table scans O(admitted files), not every file's
-    * key columns. COMPOSITE keys compose as per-column admitted-set
-    * INTERSECTION: a file can hold a matching (k1, k2, …) row only if,
-    * for EVERY indexed key column, its bloom admits some batch value
-    * of that column — so each indexed column can only shrink the
-    * candidate set. Columns that are unindexed, type-mismatched (the
-    * hash is type-sensitive), or over [[bloomMergeProbeCapKeys]]
-    * distinct batch values contribute no pruning; returns None when
-    * no column contributes — the caller's scan stays exact either
-    * way, and files without an index for a column conservatively
-    * survive that column. */
-  private[graft] def bloomTouchCandidates(
-      spark: SparkSession, path: String, v: Int, props: TableProps,
-      schema: StructType, keyFrame: DataFrame, keys: Seq[String])
+    * file's sidecars with the census's per-column key hashes and
+    * return the files that MIGHT contain a matching key tuple, so a
+    * small CDC batch against a 100 TB table scans O(admitted files).
+    * COMPOSITE keys compose as per-column admitted-set INTERSECTION: a
+    * file can hold a matching (k1, k2, …) row only if, for EVERY
+    * indexed key column, its bloom admits some batch value of that
+    * column. Files without an index for a column survive that column;
+    * None when no column is indexed. */
+  private def bloomCandidates(spark: SparkSession, path: String, v: Int,
+                              props: TableProps,
+                              hashes: Seq[(String, Array[Long])])
       : Option[Set[String]] = {
     val entries = manifestEntries(path, v)
-    val cap = bloomMergeProbeCapKeys
-    // the build side hashed each column under the TABLE's type — a
-    // differently-typed key frame hashes differently and would prune
-    // wrongly; such a column just contributes no pruning
-    val usable = keys.filter { k =>
-      val pc = props.phys(k)
-      entries.exists(_.bloom.contains(pc)) &&
-        keyFrame.schema(k).dataType == schema(k).dataType
-    }
-    if (usable.isEmpty) return None
     var surviving = entries.map(_.name).toSet
     var pruned = false
-    usable.foreach { k =>
+    hashes.foreach { case (k, hs) =>
       val pc = props.phys(k)
       // probe only files still in play — each column tightens the set
       val indexed = entries.filter(e =>
         surviving(e.name) && e.bloom.contains(pc))
       if (indexed.nonEmpty) {
-        val hs = keyFrame.select(xxhash64(col(k)).as("h")).distinct()
-          .limit(cap + 1).collect().map(_.getLong(0))
-        if (hs.length <= cap) {
-          val cand = indexed.map(e =>
-            (e.name, resolveOrFail(path, e.bloom(pc), v)))
-          val admitted = probeSidecars(spark, cand, hs)
-          surviving = surviving -- (indexed.map(_.name).toSet -- admitted)
-          pruned = true
-        }
+        val admitted = probeSidecars(spark, indexed.map(e =>
+          (e.name, resolveOrFail(path, e.bloom(pc), v))), hs)
+        surviving = surviving -- (indexed.map(_.name).toSet -- admitted)
+        pruned = true
       }
     }
     if (pruned) Some(surviving) else None
   }
+
+  /** The bloom pre-prune of a keyed read or commit on its own: the
+    * files whose index admits some key tuple of `keyFrame`, or None
+    * when no census or no index applies (the caller's exact filter
+    * keeps the result correct either way). */
+  private[graft] def bloomTouchCandidates(
+      spark: SparkSession, path: String, v: Int, props: TableProps,
+      schema: StructType, keyFrame: DataFrame, keys: Seq[String])
+      : Option[Set[String]] =
+    keyCensus(keyFrame, keys, schema)
+      .flatMap(c => bloomCandidates(spark, path, v, props, c.columns))
 
   /** APPEND: commit `df` as NEW pool files RE-LINKING the whole
     * current manifest — the O(delta) ingest verb a streaming bronze
@@ -1192,8 +1230,7 @@ object VersionedTable {
   def append(spark: SparkSession, df: DataFrame, path: String,
              operation: String = "APPEND",
              partitionBy: Seq[String] = Nil): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
+    val v = latest(path)
     val schema = schemaOf(path, v)
     require(df.schema.length == schema.length &&
         schemaKey(df.schema) == schemaKey(schema),
@@ -1216,8 +1253,7 @@ object VersionedTable {
     * evolution path. */
   def appendEvolve(spark: SparkSession, df: DataFrame, path: String,
                    operation: String = "APPEND[EVOLVE]"): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
+    val v = latest(path)
     val schema = schemaOf(path, v)
     val conflicts = schema.flatMap { f =>
       df.schema.find(_.name == f.name).collect {
@@ -1235,14 +1271,7 @@ object VersionedTable {
       if (df.columns.contains(f.name)) col(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }: _*)
-    val props = propsOf(path, v)
-    var p = props
-    newFields.map(_.name).foreach { c =>
-      val phys = if (p.usedPhys.contains(c)) s"${c}_v${v + 1}" else c
-      p = p.copy(
-        colmap = if (phys == c) p.colmap else p.colmap + (c -> phys),
-        usedPhys = p.usedPhys + phys)
-    }
+    val p = withNewColumns(propsOf(path, v), newFields.map(_.name), v + 1)
     val fresh = writeDataFiles(aligned, path, v + 1, props = p)
     enforceConstraints(spark, path, v + 1, fresh, newSchema, p)
     commitActions(path, operation, v, Set.empty, fresh, newSchema,
@@ -1271,19 +1300,8 @@ object VersionedTable {
     * query-time footer I/O (what Delta/Iceberg get from log stats). */
   def readWhere(spark: SparkSession, path: String, column: String,
                 lo: Double, hi: Double,
-                asOf: Option[Int] = None): DataFrame = {
-    val v = asOf.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    require(versions(path).contains(v), s"version $v not committed at $path")
-    require(!vacuumedVersions(path).contains(v),
-      s"version $v was vacuumed at $path")
-    val keep = fileStats(path, v, column).collect {
-      case (n, None) => n
-      case (n, Some((mn, mx))) if mx >= lo && mn <= hi => n
-    }
-    readFiles(spark, path, keep, schemaOf(path, v), v, propsOf(path, v))
-      .filter(col(column) >= lo && col(column) <= hi)
-  }
+                asOf: Option[Int] = None): DataFrame =
+    readWhereMulti(spark, path, Seq((column, lo, hi)), asOf)
 
   /** Multi-column stats-pruned read: shortlist files whose manifest
     * [min, max] overlaps EVERY range (conjunctive pruning — the 2-D+
@@ -1295,25 +1313,12 @@ object VersionedTable {
                      ranges: Seq[(String, Double, Double)],
                      asOf: Option[Int] = None): DataFrame = {
     require(ranges.nonEmpty, "readWhereMulti needs at least one range")
-    val v = asOf.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    require(versions(path).contains(v), s"version $v not committed at $path")
-    require(!vacuumedVersions(path).contains(v),
-      s"version $v was vacuumed at $path")
-    val props = propsOf(path, v)
-    val keep = manifestEntries(path, v).filter { e =>
-      ranges.forall { case (c, lo, hi) =>
-        e.stats.get(props.phys(c)) match {
-          case Some((mn, mx)) => mx >= lo && mn <= hi
-          case None => true // stat-less: unprunable, never wrong
-        }
-      }
-    }.map(_.name)
+    val v = readableVersion(path, asOf)
     val filter = ranges.map { case (c, lo, hi) =>
       col(c) >= lo && col(c) <= hi
     }.reduce(_ && _)
-    readFiles(spark, path, keep, schemaOf(path, v), v, props)
-      .filter(filter)
+    readFiles(spark, path, prunedStatsEntries(path, v, ranges),
+      schemaOf(path, v), v, propsOf(path, v)).filter(filter)
   }
 
   /** Entry names [[readWhereMulti]] would scan (exposed for pruning
@@ -1343,11 +1348,7 @@ object VersionedTable {
   def readWhereStr(spark: SparkSession, path: String, column: String,
                    lo: String, hi: String,
                    asOf: Option[Int] = None): DataFrame = {
-    val v = asOf.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    require(versions(path).contains(v), s"version $v not committed at $path")
-    require(!vacuumedVersions(path).contains(v),
-      s"version $v was vacuumed at $path")
+    val v = readableVersion(path, asOf)
     val keep = prunedStringEntries(path, v, column, lo, hi).map(_.name)
     readFiles(spark, path, keep, schemaOf(path, v), v, propsOf(path, v))
       .filter(col(column) >= lo && col(column) <= hi)
@@ -1375,17 +1376,10 @@ object VersionedTable {
   def readPartition(spark: SparkSession, path: String,
                     values: Map[String, String],
                     asOf: Option[Int] = None): DataFrame = {
-    val v = asOf.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    require(versions(path).contains(v), s"version $v not committed at $path")
-    require(!vacuumedVersions(path).contains(v),
-      s"version $v was vacuumed at $path")
-    val props = propsOf(path, v)
-    val keep = manifestEntries(path, v).filter(e =>
-      values.forall { case (k, want) =>
-        e.part.get(props.phys(k)).forall(_ == want) })
-    val pruned = readEntries(spark, path, keep, schemaOf(path, v), v,
-      props = props)
+    val v = readableVersion(path, asOf)
+    val pruned = readEntries(spark, path,
+      prunedPartitionEntries(path, v, values), schemaOf(path, v), v,
+      props = propsOf(path, v))
     values.foldLeft(pruned) { case (df, (k, want)) =>
       df.filter(col(k).cast("string") === lit(want))
     }
@@ -1441,20 +1435,20 @@ object VersionedTable {
   private def bloomFpp(props: TableProps): Double =
     props.tbl.get(bloomFppProp).map(_.toDouble).getOrElse(0.03)
 
-  /** Build bloom sidecars for `physCols` over `entries`' pool files
-    * and return the entries with their `bloom` references attached.
-    * ONE distributed aggregation job does the data-sized work
-    * (map-side partial blooms per file split, `mergeInPlace` combine
-    * — bloom bits are an OR, so split order never changes the
+  /** BACKFILL bloom sidecars for `physCols` over `entries`' existing
+    * pool files ([[buildBloomIndex]] only — commits index their own
+    * files inside the write job, see [[GraftParquetFormat]]) and
+    * return the entries with their `bloom` references attached. ONE
+    * distributed aggregation job per size class does the data-sized
+    * work (map-side partial blooms per file split, `mergeInPlace`
+    * combine — bloom bits are an OR, so split order never changes the
     * result); what reaches the driver is one filter per (file,
-    * column) — the same O(new files) metadata the footer loop already
-    * pays per commit. Values are indexed as `xxhash64(col)` longs;
-    * [[readIn]] probes with the identically-hashed literal. */
-  private def buildBloomSidecars(spark: SparkSession, path: String,
-                                 v: Int, entries: Seq[FileEntry],
-                                 physCols: Seq[String], fpp: Double,
-                                 readSchema: Option[StructType] = None)
-      : Seq[FileEntry] = {
+    * column). Values are indexed as `xxhash64(col)` longs, exactly as
+    * the write path indexes them; [[readIn]] probes with the
+    * identically-hashed literal. */
+  private[operators] def buildBloomSidecars(spark: SparkSession,
+      path: String, v: Int, entries: Seq[FileEntry], physCols: Seq[String],
+      fpp: Double, readSchema: StructType): Seq[FileEntry] = {
     if (entries.isEmpty || physCols.isEmpty) return entries
     // size the filter per FILE, not per commit: a serialized bloom is
     // numBits/8 bytes REGARDLESS of insertions, so sizing every file
@@ -1465,7 +1459,8 @@ object VersionedTable {
     // of its optimal size and a mixed commit costs ≤ log2(maxRows)
     // passes — each pass scanning ONLY its own files.
     val byClass = entries.groupBy(e => 64 - java.lang.Long
-      .numberOfLeadingZeros(math.max(1L, math.min(e.phys, 4000000L))))
+      .numberOfLeadingZeros(math.max(1L,
+        math.min(e.phys, GraftParquetFormat.maxItems))))
     val done = byClass.toSeq.sortBy(_._1).flatMap { case (_, es) =>
       bloomSidecarPass(spark, path, v, es, physCols, fpp, readSchema)
     }.map(e => e.name -> e).toMap
@@ -1476,16 +1471,13 @@ object VersionedTable {
   private def bloomSidecarPass(spark: SparkSession, path: String,
                                v: Int, entries: Seq[FileEntry],
                                physCols: Seq[String], fpp: Double,
-                               readSchema: Option[StructType])
-      : Seq[FileEntry] = {
+                               readSchema: StructType): Seq[FileEntry] = {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.util.sketch.BloomFilter
-    val estItems = math.max(1L, math.min(entries.map(_.phys).max, 4000000L))
-    val numBits = math.min(BloomFilter.optimalNumOfBits(estItems, fpp),
-      1L << 26)
+    val estItems = math.max(1L,
+      math.min(entries.map(_.phys).max, GraftParquetFormat.maxItems))
+    val numBits = GraftParquetFormat.numBits(estItems, fpp)
     val files = entries.map(e => resolveOrFail(path, e.name, v))
-    val reader = readSchema.fold(spark.read)(s => spark.read.schema(s))
     val aggs = physCols.map { c =>
       org.apache.spark.sql.graft.GraftBridge.column(
         new BloomFilterAggregate(
@@ -1494,7 +1486,7 @@ object VersionedTable {
           Literal(estItems), Literal(numBits)).toAggregateExpression())
         .as(s"_bl_$c")
     }
-    val byFile = reader.parquet(files: _*)
+    val byFile = spark.read.schema(readSchema).parquet(files: _*)
       .select(physCols.map(col) :+
         substring_index(col("_metadata.file_path"), "/", -1)
           .as("_bl_file"): _*)
@@ -1526,8 +1518,7 @@ object VersionedTable {
     * [[bloomColumnsProp]] to be set. Returns the new version (or the
     * current one when nothing was missing). */
   def buildBloomIndex(spark: SparkSession, path: String): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
+    val v = latest(path)
     val props = propsOf(path, v)
     val logical = bloomConfig(props)
     require(logical.nonEmpty,
@@ -1540,54 +1531,23 @@ object VersionedTable {
       .filter(e => !phys.forall(e.bloom.contains))
     if (missing.isEmpty) return v
     val updated = buildBloomSidecars(spark, path, v + 1, missing, phys,
-      bloomFpp(props), readSchema = Some(physSchema))
+      bloomFpp(props), physSchema)
     commitActions(path, "BLOOM INDEX", v, missing.map(_.name).toSet,
       updated, schema)
   }
 
   /** Entries of version `v` that might contain any of `values` in
-    * `column`: [min, max] stats and partition values prune first
-    * (pure manifest metadata), then the survivors' bloom sidecars are
-    * probed IN PARALLEL (one tiny task per batch of sidecar files —
-    * the probe ships only the 8-byte hashes, each executor reads just
-    * its sidecars, and what returns is a shortlist of names, so the
-    * driver never loads index bytes). Files without an index for the
-    * column always survive — pruning can drop rows never. */
+    * `column`: the `column IN (values)` case of
+    * [[pruneEntriesForFilters]] — stats, string zone maps and
+    * partition values (through the column's typed cast) prune first,
+    * then the survivors' bloom sidecars are probed. Files without an
+    * index for the column always survive — pruning can drop rows
+    * never. */
   def prunedBloomEntries(spark: SparkSession, path: String, v: Int,
                          column: String, values: Seq[Any])
-      : Seq[FileEntry] = {
-    val props = propsOf(path, v)
-    val pc = props.phys(column)
-    val dt = schemaOf(path, v)(column).dataType
-    // partition values were recorded as the column rendered to string
-    // by the partitioned write; compare through the SAME typed cast
-    // the bloom hash uses — an untyped String.valueOf(x) == pv would
-    // wrongly prune a type-lax literal (Int 7 vs a double partition's
-    // "7.0"). A literal the column type cannot represent disables
-    // partition pruning for the whole lookup (never prunes wrongly).
-    val partStrs: Option[Set[String]] = {
-      val rendered = values.map(x => typedString(x, dt))
-      if (rendered.contains(None)) None
-      else Some(rendered.flatten.toSet)
-    }
-    val statted = manifestEntries(path, v).filter { e =>
-      val statOk = e.stats.get(pc).forall { case (mn, mx) =>
-        values.exists(x => looseNum(x).forall(d => d >= mn && d <= mx))
-      }
-      // string zone maps prune point lookups too (bounds are
-      // truncation-safe, so containment is conservative-correct)
-      val sstatOk = e.sstats.get(pc).forall { case (mn, mx) =>
-        values.exists {
-          case s: String => s >= mn && s <= mx
-          case _ => true
-        }
-      }
-      val partOk = e.part.get(pc).forall(pv =>
-        partStrs.forall(_.contains(pv)))
-      statOk && sstatOk && partOk
-    }
-    bloomSurvivors(spark, path, v, statted, pc, dt, values)
-  }
+      : Seq[FileEntry] =
+    pruneEntriesForFilters(spark, path, v,
+      Seq(org.apache.spark.sql.sources.In(column, values.toArray)))
 
   /** Driver-side Catalyst eval of a literal expression — the
     * planner-path renderers below must not pay a Spark JOB per
@@ -1689,9 +1649,12 @@ object VersionedTable {
     val conj = filters.flatMap(flat)
     def dtOf(c: String): Option[DataType] =
       schema.fields.find(_.name == c).map(_.dataType)
-    // rendered through the column's typed cast — matches how the
-    // partitioned write recorded the value (see prunedBloomEntries);
-    // memoized: this runs per ENTRY and must stay a pure local lookup
+    // partition values were recorded as the column rendered to string
+    // by the partitioned write: compare through the same typed cast
+    // (an untyped String.valueOf(x) would wrongly prune Int 7 against
+    // a double partition's "7.0"; a literal the type cannot represent
+    // prunes nothing). Memoized: this runs per ENTRY and must stay a
+    // pure local lookup
     val renderCache =
       scala.collection.mutable.HashMap[(String, Any), Option[String]]()
     def partRender(c: String, x: Any): Option[String] =
@@ -1803,11 +1766,7 @@ object VersionedTable {
   def readIn(spark: SparkSession, path: String, column: String,
              values: Seq[Any], asOf: Option[Int] = None): DataFrame = {
     require(values.nonEmpty, "readIn needs at least one value")
-    val v = asOf.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    require(versions(path).contains(v), s"version $v not committed at $path")
-    require(!vacuumedVersions(path).contains(v),
-      s"version $v was vacuumed at $path")
+    val v = readableVersion(path, asOf)
     val keep = prunedBloomEntries(spark, path, v, column, values)
     readEntries(spark, path, keep, schemaOf(path, v), v,
       props = propsOf(path, v))
@@ -1832,11 +1791,7 @@ object VersionedTable {
                keys: DataFrame, asOf: Option[Int] = None): DataFrame = {
     require(keys.columns.contains(column),
       s"keys frame must carry a '$column' column")
-    val v = asOf.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    require(versions(path).contains(v), s"version $v not committed at $path")
-    require(!vacuumedVersions(path).contains(v),
-      s"version $v was vacuumed at $path")
+    val v = readableVersion(path, asOf)
     val props = propsOf(path, v)
     val schema = schemaOf(path, v)
     val keyFrame = keys.select(col(column)).distinct()
@@ -1869,11 +1824,7 @@ object VersionedTable {
     * links (re-export after vacuum). Returns the listed paths. */
   def exportManifest(spark: SparkSession, path: String, outDir: String,
                      asOf: Option[Int] = None): Seq[String] = {
-    val v = asOf.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    require(versions(path).contains(v), s"version $v not committed at $path")
-    require(!vacuumedVersions(path).contains(v),
-      s"version $v was vacuumed at $path")
+    val v = readableVersion(path, asOf)
     val entries = manifestEntries(path, v)
     val schema = schemaOf(path, v)
     val props = propsOf(path, v)
@@ -1949,8 +1900,7 @@ object VersionedTable {
                           sortCols: Seq[String], minFileBytes: Long,
                           numFiles: Int,
                           dvMaterializeRatio: Double = 0.3): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
+    val v = latest(path)
     val entries = manifestEntries(path, v)
     val small = entries.filter(_.bytes < minFileBytes).map(_.name).toSet
     val dvHeavy = entries.filter(e => e.dv.isDefined && e.phys > 0 &&
@@ -1975,18 +1925,15 @@ object VersionedTable {
     * table commits in O(delta). */
   def upsert(spark: SparkSession, path: String, updates: DataFrame,
              keys: Seq[String], operation: String = "MERGE"): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
+    val v = latest(path)
     val schema = schemaOf(path, v)
     val props = propsOf(path, v)
     // materialize the update source once (lazy localCheckpoint,
-    // computed by the bloom-probe collect): it otherwise re-evaluates
-    // for the key collect, the touch semi-join, and the rewrite
+    // computed by the key census): it otherwise re-evaluates for the
+    // census and the rewrite
     val upd = updates.pin(eager = false)
-    val keyFrame = upd.select(keys.map(col): _*).distinct()
-    val touched = touchedFiles(spark, path, v, schema,
-      _.join(keyFrame, keys, "left_semi"), props,
-      bloomTouchCandidates(spark, path, v, props, schema, keyFrame, keys))
+    val (touched, _) = keyedTouch(spark, path, v, schema, props,
+      upd.select(keys.map(col): _*), keys)
     val touchedRows = readFiles(spark, path, touched, schema, v, props)
     commitRewrite(spark, path, operation,
       Medallion.mergeUpsert(touchedRows, upd, keys), touched, schema, v)
@@ -2001,18 +1948,15 @@ object VersionedTable {
   def deleteMatching(spark: SparkSession, path: String, keys: DataFrame,
                      keyCols: Seq[String],
                      operation: String = "DELETE[KEYS]"): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
+    val v = latest(path)
     val schema = schemaOf(path, v)
     val props = propsOf(path, v)
     // one materialization of the (possibly expensive) key frame — it
-    // feeds the bloom collect, the touch semi-join, and the anti-join
+    // feeds the key census and the anti-join
     val keyFrame = keys.select(keyCols.map(col): _*).distinct()
       .pin(eager = false)
-    val touched = touchedFiles(spark, path, v, schema,
-      _.join(keyFrame, keyCols, "left_semi"), props,
-      bloomTouchCandidates(spark, path, v, props, schema, keyFrame,
-        keyCols))
+    val (touched, _) = keyedTouch(spark, path, v, schema, props, keyFrame,
+      keyCols)
     val kept = readFiles(spark, path, touched, schema, v, props)
       .join(keyFrame, keyCols, "left_anti")
     commitRewrite(spark, path, operation, kept, touched, schema, v)
@@ -2027,8 +1971,7 @@ object VersionedTable {
     * different type fails loudly rather than silently coercing. */
   def upsertEvolve(spark: SparkSession, path: String, updates: DataFrame,
                    keys: Seq[String]): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
+    val v = latest(path)
     val schema = schemaOf(path, v)
     val conflicts = schema.flatMap { f =>
       updates.schema.find(_.name == f.name).collect {
@@ -2041,23 +1984,16 @@ object VersionedTable {
     val props = propsOf(path, v)
     // one materialization of the update source (see upsert)
     val upd = updates.pin(eager = false)
-    val keyFrame = upd.select(keys.map(col): _*).distinct()
-    val touched = touchedFiles(spark, path, v, schema,
-      _.join(keyFrame, keys, "left_semi"), props,
-      bloomTouchCandidates(spark, path, v, props, schema, keyFrame, keys))
+    val (touched, _) = keyedTouch(spark, path, v, schema, props,
+      upd.select(keys.map(col): _*), keys)
     val merged = readFiles(spark, path, touched, schema, v, props)
       .join(upd, keys, "left_anti")
       .unionByName(upd, allowMissingColumns = true)
     // evolved columns get a physical name; a name that collides with
     // a previously-dropped column's bytes gets a FRESH physical name
     // (the usedPhys tombstone) instead of resurrecting them
-    var p = props
-    merged.columns.filterNot(schema.fieldNames.contains).foreach { c =>
-      val phys = if (p.usedPhys.contains(c)) s"${c}_v${v + 1}" else c
-      p = p.copy(
-        colmap = if (phys == c) p.colmap else p.colmap + (c -> phys),
-        usedPhys = p.usedPhys + phys)
-    }
+    val p = withNewColumns(props,
+      merged.columns.filterNot(schema.fieldNames.contains), v + 1)
     commitRewrite(spark, path, "MERGE[EVOLVE]", merged, touched,
       nullableSchema(merged.schema), v,
       newProps = if (p == props) None else Some(p))
@@ -2082,18 +2018,14 @@ object VersionedTable {
   def upsertLatest(spark: SparkSession, path: String, updates: DataFrame,
                    key: String, orderCol: String, tieBreaker: String,
                    operation: String = "MERGE"): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
+    val v = latest(path)
     val schema = schemaOf(path, v)
     val props = propsOf(path, v)
     // one materialization of the update batch (see upsert)
     val upd = updates.pin(eager = false)
     val nonNullUpd = upd.filter(col(key).isNotNull)
-    val keyFrame = nonNullUpd.select(col(key)).distinct()
-    val touched = touchedFiles(spark, path, v, schema,
-      _.join(keyFrame, Seq(key), "left_semi"), props,
-      bloomTouchCandidates(spark, path, v, props, schema, keyFrame,
-        Seq(key)))
+    val (touched, _) = keyedTouch(spark, path, v, schema, props,
+      nonNullUpd.select(col(key)), Seq(key))
     val base = readFiles(spark, path, touched, schema, v, props)
     val merged = Medallion.dedupLatest(
         base.filter(col(key).isNotNull).unionByName(nonNullUpd),
@@ -2105,7 +2037,17 @@ object VersionedTable {
 
   /** The `operation` strings from the commit log, ascending by
     * version (driver-side; log is tiny). */
-  def operations(path: String): Seq[String] = logEntries(path).map(_._2)
+  def operations(path: String): Seq[String] =
+    versions(path).map(operationOf(path, _))
+
+  /** The `operation` strings, NEWEST first and lazily: a caller looking
+    * for a recent marker parses only the log lines it reaches. */
+  def operationsNewestFirst(path: String): Iterator[String] =
+    versions(path).reverseIterator.map(operationOf(path, _))
+
+  /** One log line's operation — no manifest or checkpoint parse. */
+  private def operationOf(path: String, v: Int): String =
+    mapper.readTree(logLine(path, v)).get("operation").asText
 
   /** Parsed commit-log entries, ascending:
     * (version, operation, num_rows, committed_at). */
@@ -2135,8 +2077,7 @@ object VersionedTable {
                                 condFor: DataFrame => Column,
                                 assignments: Seq[(String, DataFrame => Column)])
       : (Int, Long) = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
+    val v = latest(path)
     val schema = schemaOf(path, v)
     val cols = schema.fieldNames.toSeq
     assignments.foreach { case (c, _) =>
@@ -2145,19 +2086,17 @@ object VersionedTable {
     require(assignments.map(_._1).distinct.size == assignments.size,
       s"duplicate UPDATE target in ${assignments.map(_._1)}")
     val props = propsOf(path, v)
-    val touched = touchedFiles(spark, path, v, schema,
+    // the touch scan's per-file hit counts sum to the affected-row
+    // count (the SQL command's result row) — no separate count query
+    val hits = touchedFiles(spark, path, v, schema,
       df => df.filter(condFor(df)), props)
+    val touched = hits.keySet
     // SQL UPDATE semantics: the condition and EVERY assignment RHS are
     // evaluated against the pre-update row — one select, so no
     // assignment can observe another's result (swap-style SET a=b, b=a
     // and condition columns that are themselves assigned both work)
     val assignMap = assignments.toMap
     val base = readFiles(spark, path, touched, schema, v, props)
-    // affected-row count (the SQL command's result row): one
-    // column-pruned count over the TOUCHED files only — bounded by
-    // the same pruning as the rewrite itself
-    val affected = base
-      .filter(coalesce(condFor(base), lit(false))).count()
     val updated = base
       .select(cols.map { c =>
         assignMap.get(c) match {
@@ -2167,7 +2106,7 @@ object VersionedTable {
         }
       }: _*)
     (commitRewrite(spark, path, "UPDATE", updated, touched, schema, v),
-      affected)
+      hits.values.sum)
   }
 
   /** `DELETE FROM ... WHERE cond` analog: rows matching
@@ -2179,25 +2118,23 @@ object VersionedTable {
 
   /** Column-factory twin of [[delete]] (the SQL `DELETE FROM` command
     * path — see [[updateCore]] for why a callback, not a SQL string).
-    * Returns (new version, deleted-row count — exact, from manifest
-    * row totals, zero extra I/O). */
+    * Returns (new version, deleted-row count — the sum of the touch
+    * scan's per-file hit counts, no extra query). */
   private[graft] def deleteCore(spark: SparkSession, path: String,
                                 condFor: DataFrame => Column): (Int, Long) = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
+    val v = latest(path)
     val schema = schemaOf(path, v)
     // SQL DELETE semantics: only rows where the condition is TRUE are
     // removed — a NULL condition keeps the row (plain !cond would
     // silently drop it)
     def hit(df: DataFrame) = coalesce(condFor(df), lit(false))
     val props = propsOf(path, v)
-    val touched = touchedFiles(spark, path, v, schema,
+    val hits = touchedFiles(spark, path, v, schema,
       df => df.filter(hit(df)), props)
-    val base = readFiles(spark, path, touched, schema, v, props)
+    val base = readFiles(spark, path, hits.keySet, schema, v, props)
     val kept = base.filter(!hit(base))
-    val before = manifestEntries(path, v).map(_.rows).sum
-    val nv = commitRewrite(spark, path, "DELETE", kept, touched, schema, v)
-    (nv, before - manifestEntries(path, nv).map(_.rows).sum)
+    (commitRewrite(spark, path, "DELETE", kept, hits.keySet, schema, v),
+      hits.values.sum)
   }
 
   /** Write ONE deletion-vector sidecar PER touched data file (Delta's
@@ -2249,8 +2186,7 @@ object VersionedTable {
     * Live row counts in the log stay exact. */
   def deleteVectors(spark: SparkSession, path: String,
                     conditionSql: String): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
+    val v = latest(path)
     val schema = schemaOf(path, v)
     val entries = manifestEntries(path, v)
     val hit = coalesce(expr(conditionSql), lit(false))
@@ -2319,8 +2255,7 @@ object VersionedTable {
     * A computed column necessarily rewrites every row. */
   def addColumn(spark: SparkSession, path: String, name: String,
                 exprSql: String): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
+    val v = latest(path)
     val schema = schemaOf(path, v)
     require(!schema.fieldNames.contains(name),
       s"column $name already exists")
@@ -2344,13 +2279,7 @@ object VersionedTable {
     // a new column whose name collides with a previously-dropped
     // column's PHYSICAL bytes gets a fresh physical name — re-linked
     // files must read it as null, never as the dropped column's data
-    val props = propsOf(path, v)
-    val phys = if (props.usedPhys.contains(name)) s"${name}_v${v + 1}"
-               else name
-    val newProps = props.copy(
-      colmap = if (phys == name) props.colmap
-               else props.colmap + (name -> phys),
-      usedPhys = props.usedPhys + phys)
+    val newProps = withNewColumns(propsOf(path, v), Seq(name), v + 1)
     if (foldsToNull)
       commitActions(path, "ADD COLUMN", v, Set.empty, Nil,
         StructType(schema.fields :+
@@ -2650,8 +2579,7 @@ object VersionedTable {
     * column of a 100 TB table costs one log line. */
   def renameColumn(spark: SparkSession, path: String, from: String,
                    to: String): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
+    val v = latest(path)
     val schema = schemaOf(path, v)
     require(schema.fieldNames.contains(from),
       s"column $from not in ${schema.fieldNames.toSeq}")
@@ -2681,8 +2609,7 @@ object VersionedTable {
     * column's PHYSICAL name goes into the usedPhys tombstone set so a
     * later ADD COLUMN of the same name can never resurrect its data. */
   def dropColumn(spark: SparkSession, path: String, name: String): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
+    val v = latest(path)
     val schema = schemaOf(path, v)
     require(schema.fieldNames.contains(name),
       s"column $name not in ${schema.fieldNames.toSeq}")
@@ -2707,8 +2634,7 @@ object VersionedTable {
     * NEW files are validated against it at O(new data) cost. */
   def addConstraint(spark: SparkSession, path: String, name: String,
                     sql: String): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
+    val v = latest(path)
     val props = propsOf(path, v)
     require(!props.constraints.contains(name),
       s"constraint $name already exists on $path")
@@ -2729,8 +2655,7 @@ object VersionedTable {
   def setTableProperties(path: String,
                          kv: Map[String, String]): Int = {
     require(kv.nonEmpty, "no properties given")
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
+    val v = latest(path)
     val props = propsOf(path, v)
     commitActions(path,
       s"SET TBLPROPERTIES[${kv.keys.toSeq.sorted.mkString(",")}]",
@@ -2740,8 +2665,7 @@ object VersionedTable {
 
   /** `ALTER TABLE UNSET TBLPROPERTIES` — metadata-only. */
   def unsetTableProperty(path: String, key: String): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
+    val v = latest(path)
     val props = propsOf(path, v)
     require(props.tbl.contains(key),
       s"table property $key not set on $path")
@@ -2755,8 +2679,7 @@ object VersionedTable {
 
   /** `ALTER TABLE DROP CONSTRAINT` — metadata-only. */
   def dropConstraint(path: String, name: String): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
+    val v = latest(path)
     val props = propsOf(path, v)
     require(props.constraints.contains(name),
       s"constraint $name not found on $path " +
@@ -2779,11 +2702,7 @@ object VersionedTable {
     * therefore force the scan path. */
   def statsAggMeta(path: String, column: String,
                    asOf: Option[Int] = None): Option[(Long, Double, Double)] = {
-    val v = asOf.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    require(versions(path).contains(v), s"version $v not committed at $path")
-    require(!vacuumedVersions(path).contains(v),
-      s"version $v was vacuumed at $path")
+    val v = readableVersion(path, asOf)
     val pc = propsOf(path, v).phys(column)
     val es = manifestEntries(path, v)
     if (es.nonEmpty && es.forall(e =>
@@ -2802,11 +2721,7 @@ object VersionedTable {
     * (`SELECT count(*)/min/max` without touching data). */
   def statsAgg(spark: SparkSession, path: String, column: String,
                asOf: Option[Int] = None): (Long, Double, Double) = {
-    val v = asOf.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    require(versions(path).contains(v), s"version $v not committed at $path")
-    require(!vacuumedVersions(path).contains(v),
-      s"version $v was vacuumed at $path")
+    val v = readableVersion(path, asOf)
     val props = propsOf(path, v)
     val pc = props.phys(column)
     val es = manifestEntries(path, v)

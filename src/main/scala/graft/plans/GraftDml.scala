@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, EqualTo, ExprId, Expression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -151,17 +151,20 @@ case class GraftUpdateCommand(path: String, targetAttrs: Seq[Attribute],
   *
   * Execution is file-granular: equality conjuncts of `cond` that pair
   * a target column with a source-only expression become the TOUCH
-  * KEYS — a bloom-pruned [[VersionedTable.touchedFiles]] scan
-  * shortlists the files holding matching keys, and only those join
-  * the source (full-outer) for row assembly; every other file
-  * re-links. `WHEN NOT MATCHED BY SOURCE` forces a full-table touch
-  * (any file may hold a source-less row — same as Delta).
+  * KEYS — [[VersionedTable.keyedTouch]] (one key census, a bloom
+  * pre-prune, one touch scan) shortlists the files holding matching
+  * keys, and only those join the source (full-outer) for row
+  * assembly; every other file re-links. `WHEN NOT MATCHED BY SOURCE`
+  * forces a full-table touch (any file may hold a source-less row —
+  * same as Delta).
   *
   * Ambiguity contract (Delta's): when a target row is matched by MORE
   * THAN ONE source row and a matched/not-matched-by-source clause
   * exists, the merge fails rather than emitting duplicated target
   * rows. Detected as duplicate source key tuples that semi-join the
-  * touched files — exact under a pure-equality `cond`, conservative
+  * touched files, a query that runs only when the key census saw a
+  * duplicate tuple (or could not census the keys) — exact under a
+  * pure-equality `cond`, conservative
   * (may reject a merge whose residual predicates disambiguate) when
   * `cond` carries extra conjuncts. Matched clauses additionally
   * REQUIRE at least one equality key (a pure-theta matched merge
@@ -204,9 +207,7 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
   }
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val v = VersionedTable.latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed versions at $path"))
+    val v = VersionedTable.latest(path)
     val schema = VersionedTable.schemaOf(path, v)
     val props = VersionedTable.propsOf(path, v)
     val tgt = GraftDml.idMap(targetAttrs)
@@ -280,20 +281,18 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
       "MERGE: matched / not-matched-by-source clauses need at least " +
         "one target-column = source-expression equality in ON")
 
-    // key frame named by TARGET columns (used for the touch semi-join)
-    val keyFrame =
+    // source key columns named by TARGET columns: the key census
+    // input (touch discovery + duplicate flag) and the ambiguity guard
+    val srcKeys =
       if (keyPairs.isEmpty) null
       else src.select(keyPairs.map { case (t, se) =>
-        GraftBridge.column(se).as(t) }: _*).distinct()
+        GraftBridge.column(se).as(t) }: _*)
 
-    val touchAll = nmbsActs.nonEmpty || keyPairs.isEmpty
-    val touched: Set[String] =
-      if (touchAll)
-        VersionedTable.manifestEntries(path, v).map(_.name).toSet
-      else VersionedTable.touchedFiles(spark, path, v, schema,
-        _.join(keyFrame, keys, "left_semi"), props,
-        VersionedTable.bloomTouchCandidates(spark, path, v, props,
-          schema, keyFrame, keys))
+    val (touched, mayDup) =
+      if (nmbsActs.nonEmpty || keyPairs.isEmpty)
+        (VersionedTable.manifestEntries(path, v).map(_.name).toSet, true)
+      else VersionedTable.keyedTouch(spark, path, v, schema, props,
+        srcKeys, keys)
     val base = VersionedTable.readFiles(spark, path, touched, schema,
       v, props)
 
@@ -306,27 +305,28 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
       val inserts = assembleInserts(unmatched, nmActs, schema)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val n = inserts.count()
-        VersionedTable.commitRewrite(spark, path, "MERGE", inserts,
-          Set.empty, schema, v)
-        return Seq(Row(n, 0L, 0L, n))
+        val n = Observation()
+        VersionedTable.commitRewrite(spark, path, "MERGE",
+          inserts.observe(n, count(lit(1)).as("n")), Set.empty, schema, v)
+        val ins = n.get("n").asInstanceOf[Long]
+        return Seq(Row(ins, 0L, 0L, ins))
       } finally { inserts.unpersist(); () }
     }
 
     // ambiguity guard (Delta semantics): duplicate source key tuples
     // that hit a touched file would duplicate target rows in the
-    // full-outer assembly below — fail loudly instead
-    val srcKeys = src.select(keyPairs.map { case (t, se) =>
-      GraftBridge.column(se).as(t) }: _*)
-    val dupKeys = srcKeys.groupBy(keys.map(col): _*)
-      .count().filter(col("count") > 1).drop("count")
-    if (!dupKeys.isEmpty) {
-      val ambiguous = !dupKeys.join(base, keys, "left_semi").isEmpty
-      if (ambiguous) throw new IllegalStateException(
-        "MERGE: multiple source rows match the same target row " +
-          (if (pureEqui) "" else "(conservative: ON has non-equality " +
-            "conjuncts, uniqueness is required on the equality keys) ") +
-          s"— deduplicate the source on (${keys.mkString(", ")})")
+    // full-outer assembly below — fail loudly instead. The key census
+    // already says whether any duplicate exists; only then does the
+    // exact semi-join against the touched rows run
+    if (mayDup) {
+      val dupKeys = srcKeys.groupBy(keys.map(col): _*)
+        .count().filter(col("count") > 1).drop("count")
+      if (!dupKeys.join(base, keys, "left_semi").isEmpty)
+        throw new IllegalStateException(
+          "MERGE: multiple source rows match the same target row " +
+            (if (pureEqui) "" else "(conservative: ON has non-equality " +
+              "conjuncts, uniqueness is required on the equality keys) ") +
+            s"— deduplicate the source on (${keys.mkString(", ")})")
     }
 
     val b2 = base.withColumn(tMark, lit(true))
@@ -355,22 +355,21 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
         nmbsActs.zipWithIndex.map { case (a, i) => (200 + i, a) }
     val dropIds = -2 +: allActs.collect {
       case (i, DelAct(_)) => i }
-    // one shared evaluation of the acted join feeds BOTH the metric
-    // counts and the rewrite (persisted so the full-outer join runs
-    // once; unpersisted before returning)
+    // the metric counts are OBSERVED on the rewrite's own job, so the
+    // full-outer join runs once and no count query runs. The persist
+    // is filled by that same job; it keeps the rewrite at one file per
+    // shuffle partition (a cached plan's output is not coalesced)
+    def tally(ids: Seq[Int]) = count(when(
+      col("_graft_merge_act").isin(ids.map(Integer.valueOf): _*), lit(1)))
+    val metrics = Observation()
     val acted = joined.withColumn("_graft_merge_act", act)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-    val byAct: Map[Int, Long] = acted.groupBy("_graft_merge_act")
-      .count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val updIds = allActs.collect { case (i, UpdAct(_, _)) => i }.toSet
-    val delIds = allActs.collect { case (i, DelAct(_)) => i }.toSet
-    val insIds = allActs.collect { case (i, InsAct(_, _)) => i }.toSet
-    val nUpd = byAct.collect { case (i, n) if updIds(i) => n }.sum
-    val nDel = byAct.collect { case (i, n) if delIds(i) => n }.sum
-    val nIns = byAct.collect { case (i, n) if insIds(i) => n }.sum
     val kept = acted
+      .observe(metrics,
+        tally(allActs.collect { case (i, UpdAct(_, _)) => i }).as("upd"),
+        tally(allActs.collect { case (i, DelAct(_)) => i }).as("del"),
+        tally(allActs.collect { case (i, InsAct(_, _)) => i }).as("ins"))
       .filter(!col("_graft_merge_act").isin(dropIds.map(Integer.valueOf): _*))
 
     val outCols = schema.fields.toIndexedSeq.map { f =>
@@ -391,6 +390,9 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
     val merged = kept.select(outCols: _*)
     VersionedTable.commitRewrite(spark, path, "MERGE", merged, touched,
       schema, v)
+    val m = metrics.get
+    val Seq(nUpd, nDel, nIns) =
+      Seq("upd", "del", "ins").map(m(_).asInstanceOf[Long])
     Seq(Row(nUpd + nDel + nIns, nUpd, nDel, nIns))
     } finally { acted.unpersist(); () }
   }

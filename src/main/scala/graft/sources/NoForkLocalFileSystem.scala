@@ -106,6 +106,36 @@ class NoForkRawLocalFileSystem extends RawLocalFileSystem {
     }
   }
 
+  /** Fork-free getFileLinkStatus. Without native IO Hadoop's version
+    * forks `readlink` (FileUtil.readLink) on every call, and every
+    * `FileContext.rename` of a streaming metadata-log file asks for it
+    * twice. java.nio answers the symlink question directly; a plain
+    * file or directory returns [[getFileStatus]]. A symlink returns
+    * its target's stat (zeroed when the link dangles) with the
+    * qualified link target attached, as Hadoop's own version does. */
+  override def getFileLinkStatus(f: Path): org.apache.hadoop.fs.FileStatus = {
+    val p = pathToFile(f).toPath
+    if (!Files.isSymbolicLink(p)) getFileStatus(f)
+    else {
+      val target = new Path(Files.readSymbolicLink(p).toString)
+      val st =
+        try {
+          val t = getFileStatus(f)
+          new org.apache.hadoop.fs.FileStatus(t.getLen, false,
+            t.getReplication, t.getBlockSize, t.getModificationTime,
+            t.getAccessTime, t.getPermission, t.getOwner, t.getGroup,
+            target, f)
+        } catch {
+          case _: java.io.FileNotFoundException =>
+            new org.apache.hadoop.fs.FileStatus(0, false, 0, 0, 0, 0,
+              FsPermission.getDefault, "", "", target, f)
+        }
+      st.setSymlink(org.apache.hadoop.fs.FSLinkResolver
+        .qualifySymlinkTarget(getUri, st.getPath, st.getSymlink))
+      st
+    }
+  }
+
   override def setPermission(p: Path, permission: FsPermission): Unit = {
     val f = pathToFile(p).toPath
     try Files.setPosixFilePermissions(f,

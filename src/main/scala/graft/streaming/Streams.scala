@@ -66,6 +66,19 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .start()
 
+  /** [[foreachBatchRun]] over [[fileIngest]] of `srcPath`, projected to
+    * `cols` (default: the schema's columns, without the ingest
+    * lineage columns). */
+  private def ingestRun(spark: SparkSession, srcPath: String,
+                        schema: StructType, checkpoint: String,
+                        maxFilesPerTrigger: Int, cols: Seq[String] = Nil,
+                        format: String = "json")
+                       (fn: (DataFrame, Long) => Unit): StreamingQuery =
+    foreachBatchRun(fileIngest(spark, srcPath, schema, format,
+        maxFilesPerTrigger)
+      .select((if (cols.isEmpty) schema.fieldNames.toSeq else cols)
+        .map(col): _*), checkpoint)(fn)
+
   /** The AvailableNow append-mode lifecycle for a built-in sink: `w`
     * names the sink (parquet path, memory table, graft table), the
     * offsets live in `checkpoint`. */
@@ -76,18 +89,45 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .start()
 
+  /** True when batch `batchId` of `stream` already committed into
+    * `tablePath` under the `verb` marker (`verb[batch=N,stream=S]`).
+    * The marker names its stream, so a second stream into the same
+    * table, or a restart with a fresh checkpoint, never mistakes
+    * another stream's batch N for its own. The log is read newest
+    * first and the scan stops at this stream's latest batch at or
+    * below `batchId`: a stream commits its batches in order, so an
+    * older one means batch N has not landed. An unnamed caller
+    * (`stream` empty) matches batch N of any stream. */
+  private def batchCommitted(tablePath: String, verb: String,
+                             stream: String, batchId: Long): Boolean = {
+    import graft.operators.VersionedTable
+    val marker = (java.util.regex.Pattern.quote(verb) +
+      """\[batch=(\d+)(?:,stream=(.*))?\]""").r
+    VersionedTable.operationsNewestFirst(tablePath).collectFirst {
+      case marker(b, _) if stream.isEmpty && b.toLong == batchId => true
+      case marker(b, s) if s == stream && b.toLong <= batchId =>
+        b.toLong == batchId
+    }.getOrElse(false)
+  }
+
+  private def batchMarker(verb: String, stream: String, batchId: Long) =
+    if (stream.isEmpty) s"$verb[batch=$batchId]"
+    else s"$verb[batch=$batchId,stream=$stream]"
+
   /** One micro-batch of the streaming MERGE sink: recency-aware upsert
     * of the batch into the versioned table, exactly-once via a
-    * batch-id marker in the commit log — a retried batch id is a
-    * no-op, so Structured Streaming's at-least-once `foreachBatch`
-    * delivery becomes an exactly-once table. First batch bootstraps
-    * the table. Public so specs can drive retry semantics directly. */
+    * (stream, batch-id) marker in the commit log — a retried batch of
+    * the same stream is a no-op, so Structured Streaming's
+    * at-least-once `foreachBatch` delivery becomes an exactly-once
+    * table. `stream` names the stream (its checkpoint; see
+    * [[batchCommitted]]). First batch bootstraps the table. Public so
+    * specs can drive retry semantics directly. */
   def mergeBatch(spark: SparkSession, tablePath: String, key: String,
-                 orderCol: String, tieBreaker: String)
+                 orderCol: String, tieBreaker: String, stream: String = "")
                 (batch: DataFrame, batchId: Long): Unit = {
     import graft.operators.{Medallion, VersionedTable}
-    val marker = s"STREAM_MERGE[batch=$batchId]"
-    if (!VersionedTable.operations(tablePath).contains(marker)) {
+    if (!batchCommitted(tablePath, "STREAM_MERGE", stream, batchId)) {
+      val marker = batchMarker("STREAM_MERGE", stream, batchId)
       val deduped = Medallion.dedupLatest(batch, key, orderCol, tieBreaker)
       if (VersionedTable.versions(tablePath).isEmpty)
         VersionedTable.write(deduped, tablePath, operation = marker)
@@ -104,28 +144,27 @@ object Streams {
     * [[graft.operators.VersionedTable]], newest row per key winning by
     * (`orderCol`, `tieBreaker`). Because the merge is recency-aware,
     * the final table is independent of how files were split across
-    * micro-batches. */
+    * micro-batches. The checkpoint identifies the stream in the
+    * table's exactly-once markers. */
   def mergeStream(spark: SparkSession, srcPath: String, schema: StructType,
                   tablePath: String, key: String, orderCol: String,
                   tieBreaker: String, checkpoint: String,
                   payloadCols: Seq[String],
                   maxFilesPerTrigger: Int = 32): StreamingQuery =
-    foreachBatchRun(fileIngest(spark, srcPath, schema,
-        maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(payloadCols.map(col): _*), checkpoint)(
-      mergeBatch(spark, tablePath, key, orderCol, tieBreaker))
+    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger, payloadCols)(
+      mergeBatch(spark, tablePath, key, orderCol, tieBreaker, checkpoint))
 
   /** One micro-batch of the streaming APPEND sink (r10): the batch's
     * rows commit as NEW pool files while the whole current manifest
     * RE-LINKS — O(batch) per trigger, where full-snapshot versioning
-    * priced every append at O(table). Exactly-once via the batch-id
-    * commit marker (a retried batch id is a no-op). Public so specs
+    * priced every append at O(table). Exactly-once via the (stream,
+    * batch-id) commit marker, as in [[mergeBatch]]. Public so specs
     * can drive retry semantics directly. */
-  def appendBatch(spark: SparkSession, tablePath: String)
+  def appendBatch(spark: SparkSession, tablePath: String, stream: String = "")
                  (batch: DataFrame, batchId: Long): Unit = {
     import graft.operators.VersionedTable
-    val marker = s"STREAM_APPEND[batch=$batchId]"
-    if (!VersionedTable.operations(tablePath).contains(marker)) {
+    if (!batchCommitted(tablePath, "STREAM_APPEND", stream, batchId)) {
+      val marker = batchMarker("STREAM_APPEND", stream, batchId)
       if (VersionedTable.versions(tablePath).isEmpty)
         VersionedTable.write(batch, tablePath, operation = marker)
       else
@@ -148,10 +187,8 @@ object Streams {
                    checkpoint: String, payloadCols: Seq[String],
                    maxFilesPerTrigger: Int = 32)
       : StreamingQuery =
-    foreachBatchRun(fileIngest(spark, srcPath, schema,
-      maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(payloadCols.map(col): _*), checkpoint)(
-      appendBatch(spark, tablePath))
+    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger, payloadCols)(
+      appendBatch(spark, tablePath, checkpoint))
 
   /** One trigger of the CDF STREAMING CONSUMER: apply every source
     * version the replica has not seen yet, in order, as keyed
@@ -457,9 +494,7 @@ object Streams {
                          shingleK: Int = 3, numPerm: Int = 64,
                          bands: Int = 16, threshold: Double = 0.5,
                          maxFilesPerTrigger: Int = 2): StreamingQuery =
-    foreachBatchRun(fileIngest(spark, srcPath, schema,
-      maxFilesPerTrigger = maxFilesPerTrigger)
-      .select("doc_id", "text"), checkpoint)(
+    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger, Seq("doc_id", "text"))(
       dedupIndexBatch(indexDir, pairsDir, shingleK, numPerm, bands,
         threshold))
 
@@ -492,9 +527,7 @@ object Streams {
                      outDir: String, checkpoint: String,
                      nprobe: Int = 4, k: Int = 5,
                      maxFilesPerTrigger: Int = 2): StreamingQuery =
-    foreachBatchRun(fileIngest(spark, srcPath, schema, format = "parquet",
-      maxFilesPerTrigger = maxFilesPerTrigger)
-      .select("vec_id", "embedding"), checkpoint)(
+    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger, Seq("vec_id", "embedding"), format = "parquet")(
       annProbeBatch(indexPath, outDir, nprobe, k))
 
   /** One micro-batch of the streaming anomaly monitor's count store:
@@ -520,9 +553,7 @@ object Streams {
                         checkpoint: String,
                         maxFilesPerTrigger: Int = 3)
       : StreamingQuery =
-    foreachBatchRun(fileIngest(spark, srcPath, schema,
-      maxFilesPerTrigger = maxFilesPerTrigger)
-      .select("event_type", "ts"), checkpoint)(
+    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger, Seq("event_type", "ts"))(
       hourlyCountBatch(outDir))
 
   /** The trailing-window z-score monitor re-derived from the merged
@@ -608,12 +639,9 @@ object Streams {
                        rightCols: Seq[String],
                        maxFilesPerTrigger: Int = 3)
       : StreamingQuery =
-    foreachBatchRun(fileIngest(spark, srcPath, schema,
-      maxFilesPerTrigger = maxFilesPerTrigger)
-      // payload only — fileIngest's source_file bookkeeping column
-      // must not leak into the enriched output
-      .select(schema.fieldNames.toIndexedSeq.map(
-        org.apache.spark.sql.functions.col): _*), checkpoint)(
+    // payload only — fileIngest's source_file bookkeeping column
+    // must not leak into the enriched output
+    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger)(
       asofEnrichBatch(right, key, tsCol, rightCols, outDir))
 
   /** Continuous corpus curation: document micro-batches pass the
@@ -679,9 +707,7 @@ object Streams {
                        schema: StructType, countsDir: String,
                        checkpoint: String,
                        maxFilesPerTrigger: Int = 2): StreamingQuery =
-    foreachBatchRun(fileIngest(spark, srcPath, schema,
-      maxFilesPerTrigger = maxFilesPerTrigger)
-      .select("text"), checkpoint)(
+    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger, Seq("text"))(
       tokenCountBatch(countsDir))
 
   /** Point-in-time heavy hitters over the accumulated count shards:
@@ -725,9 +751,7 @@ object Streams {
                 schema: StructType, cellsDir: String,
                 checkpoint: String,
                 maxFilesPerTrigger: Int = 2): StreamingQuery =
-    foreachBatchRun(fileIngest(spark, srcPath, schema,
-      maxFilesPerTrigger = maxFilesPerTrigger)
-      .select("lang", "source"), checkpoint)(
+    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger, Seq("lang", "source"))(
       mixCellsBatch(cellsDir))
 
   /** Point-in-time mix drift of the accumulated incoming shards vs a
@@ -763,10 +787,8 @@ object Streams {
                     schema: StructType, profDir: String,
                     checkpoint: String,
                     maxFilesPerTrigger: Int = 2): StreamingQuery =
-    foreachBatchRun(fileIngest(spark, srcPath, schema,
-      maxFilesPerTrigger = maxFilesPerTrigger)
-      // profile the DATA columns, not the ingest lineage decoration
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
+    // profile the DATA columns, not the ingest lineage decoration
+    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger)(
       profileBatch(profDir))
 
   /** Point-in-time table profile from the accumulated shards. */
@@ -793,9 +815,7 @@ object Streams {
                     schema: StructType, momDir: String, groupCol: String,
                     checkpoint: String,
                     maxFilesPerTrigger: Int = 2): StreamingQuery =
-    foreachBatchRun(fileIngest(spark, srcPath, schema,
-      maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
+    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger)(
       momentsBatch(momDir, groupCol))
 
   /** Point-in-time grouped moment statistics from the accumulated
@@ -833,9 +853,7 @@ object Streams {
                  schema: StructType, sigDir: String, k: Int,
                  checkpoint: String,
                  maxFilesPerTrigger: Int = 2): StreamingQuery =
-    foreachBatchRun(fileIngest(spark, srcPath, schema,
-      maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
+    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger)(
       kminBatch(sigDir, k))
 
   /** Point-in-time pairwise overlap estimates from the accumulated
@@ -930,9 +948,7 @@ object Streams {
                        maxFilesPerTrigger: Int = 2): StreamingQuery =
     // parquet staging: float vectors roundtrip bit-exactly (json
     // would re-parse decimal strings)
-    foreachBatchRun(fileIngest(spark, srcPath, schema, format = "parquet",
-      maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
+    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger, format = "parquet")(
       covarianceBatch(covDir))
 
   /** Point-in-time covariance from the accumulated moment shards —
@@ -967,9 +983,7 @@ object Streams {
                          exps: Seq[graft.operators.Expectation],
                          checkpoint: String,
                          maxFilesPerTrigger: Int = 2): StreamingQuery =
-    foreachBatchRun(fileIngest(spark, srcPath, schema,
-      maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
+    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger)(
       expectationsBatch(metDir, exps))
 
   /** Point-in-time expectation counters from the accumulated shards —
@@ -1005,9 +1019,7 @@ object Streams {
                      schema: StructType, dir: String, checkpoint: String,
                      width: Int, depth: Int, probes: Seq[String],
                      maxFilesPerTrigger: Int = 2): StreamingQuery =
-    foreachBatchRun(fileIngest(spark, srcPath, schema,
-      maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
+    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger)(
       countMinBatch(dir, width, depth, probes))
 
   /** Point-in-time probe readout from the accumulated CMS shards —
@@ -1053,9 +1065,7 @@ object Streams {
                          rels: Seq[(String, String, DataFrame, String)],
                          checkpoint: String,
                          maxFilesPerTrigger: Int = 2): StreamingQuery =
-    foreachBatchRun(fileIngest(spark, srcPath, schema,
-      maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
+    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger)(
       refIntegrityBatch(riDir, rels))
 
   /** Point-in-time orphan counters from the accumulated shards —
@@ -1096,9 +1106,7 @@ object Streams {
                  schema: StructType, histDir: String, groupCol: String,
                  valueCol: String, width: Double, checkpoint: String,
                  maxFilesPerTrigger: Int = 2): StreamingQuery =
-    foreachBatchRun(fileIngest(spark, srcPath, schema,
-      maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
+    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger)(
       histBatch(histDir, groupCol, valueCol, width))
 
   /** Point-in-time quantile brackets from the accumulated histogram
@@ -1131,9 +1139,7 @@ object Streams {
                         schema: StructType, fpDir: String,
                         checkpoint: String,
                         maxFilesPerTrigger: Int = 2): StreamingQuery =
-    foreachBatchRun(fileIngest(spark, srcPath, schema,
-      maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
+    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger)(
       fingerprintBatch(fpDir))
 
   /** Point-in-time fingerprint from the accumulated shards —
@@ -1167,9 +1173,7 @@ object Streams {
                  schema: StructType, massDir: String,
                  checkpoint: String,
                  maxFilesPerTrigger: Int = 2): StreamingQuery =
-    foreachBatchRun(fileIngest(spark, srcPath, schema,
-      maxFilesPerTrigger = maxFilesPerTrigger)
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
+    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger)(
       massBatch(massDir))
 
   /** Point-in-time waterfilling fit from the accumulated mass
@@ -1212,9 +1216,7 @@ object Streams {
                       schema: StructType, cents: Array[Array[Double]],
                       countsDir: String, checkpoint: String,
                       maxFilesPerTrigger: Int = 2): StreamingQuery =
-    foreachBatchRun(fileIngest(spark, srcPath, schema, format = "parquet",
-      maxFilesPerTrigger = maxFilesPerTrigger)
-      .select("vec_id", "embedding"), checkpoint)(
+    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger, Seq("vec_id", "embedding"), format = "parquet")(
       cellCountBatch(cents, countsDir))
 
   /** Point-in-time index health from the accumulated count shards. */

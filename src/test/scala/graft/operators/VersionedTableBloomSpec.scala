@@ -112,6 +112,51 @@ class VersionedTableBloomSpec extends SparkSpec {
     assert(VersionedTable.readEqual(spark, path, "k", 4100L).count() == 1)
   }
 
+  test("in-write sidecars equal a backfill of the same files: they " +
+    "admit the same values and point/keyed reads answer alike") {
+    // the property is set before any data lands, so the write job
+    // itself builds the sidecars
+    val inWrite = freshPath
+    VersionedTable.create(inWrite, scattered.schema,
+      Map(VersionedTable.bloomColumnsProp -> "k"))
+    VersionedTable.append(spark, scattered, inWrite)
+    val v = VersionedTable.latestVersion(inWrite).get
+    val entries = VersionedTable.manifestEntries(inWrite, v)
+    assert(entries.size == 8 && entries.forall(_.bloom.contains("k")))
+    // backfill THE SAME files: every file holds 512 rows, so both
+    // paths size the filter alike and must write identical bits
+    val backfilled = VersionedTable.buildBloomSidecars(spark, inWrite,
+      v + 1, entries, Seq("k"), 0.03, VersionedTable.schemaOf(inWrite, v))
+    def bits(e: VersionedTable.FileEntry) = Files.readAllBytes(
+      java.nio.file.Paths.get(inWrite, "_graft_pool", e.bloom("k")))
+    entries.zip(backfilled).foreach { case (w, b) =>
+      assert(w.bloom("k") != b.bloom("k"))
+      assert(bits(w).sameElements(bits(b)), s"${w.name}: sidecars differ")
+    }
+    // every stored key is admitted by its own file's in-write sidecar
+    entries.foreach { e =>
+      val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(bits(e))
+      val ks = spark.read.parquet(
+        VersionedTable.poolFilePath(inWrite, e.name))
+        .select(xxhash64(col("k"))).collect().map(_.getLong(0))
+      assert(ks.nonEmpty && ks.forall(bf.mightContainLong), e.name)
+    }
+    // lookups on the in-write table answer exactly as on a table
+    // written first and backfilled afterwards
+    val backfill = freshPath
+    indexed(backfill)
+    Seq(7L, 1234L, 4095L, 99999L).foreach { k =>
+      assert(VersionedTable.readEqual(spark, inWrite, "k", k).collect()
+        .toSet == VersionedTable.readEqual(spark, backfill, "k", k)
+        .collect().toSet, s"readEqual($k)")
+    }
+    val keys = spark.range(6).select((col("id") * 811 + 5).as("k"))
+    assert(VersionedTable.readKeys(spark, inWrite, "k", keys).collect()
+      .toSet == VersionedTable.readKeys(spark, backfill, "k", keys)
+      .collect().toSet)
+    assert(VersionedTable.readKeys(spark, inWrite, "k", keys).count() == 6)
+  }
+
   test("readKeys: a key FRAME semi-joins through the index; an " +
     "unindexed column degrades to the plain semi-join, same result") {
     val path = freshPath

@@ -221,6 +221,28 @@ class GraftDmlSpec extends SparkSpec {
     }
   }
 
+  test("MERGE metrics ride the write job: an empty source and a " +
+    "no-match UPDATE still commit and report zeros") {
+    withCatalog {
+      val path = s"$fresh/t"
+      mk(path, n = 20)
+      spark.sql("SELECT * FROM VALUES (1L, 1.0) AS s(k, amt) WHERE k < 0")
+        .createOrReplaceTempView("dml_empty_src")
+      val full = spark.sql(s"""
+        MERGE INTO graft.`$path` t USING dml_empty_src s ON t.k = s.k
+        WHEN MATCHED THEN UPDATE SET amt = s.amt
+        WHEN NOT MATCHED THEN INSERT (k, grp, amt) VALUES (s.k, 0L, s.amt)""")
+      assert(full.head.toSeq == Seq(0L, 0L, 0L, 0L))
+      val io = spark.sql(s"""
+        MERGE INTO graft.`$path` t USING dml_empty_src s ON t.k = s.k
+        WHEN NOT MATCHED THEN INSERT (k, grp, amt) VALUES (s.k, 0L, s.amt)""")
+      assert(io.head.toSeq == Seq(0L, 0L, 0L, 0L))
+      assert(spark.sql(s"UPDATE graft.`$path` SET amt = 1.0 WHERE k > 99")
+        .head.getLong(0) == 0L)
+      assert(rows(path).map(_._1) == (0L until 20L))
+    }
+  }
+
   test("MERGE INTO: insert-only allows duplicate source keys") {
     withCatalog {
       val path = s"$fresh/t"

@@ -58,6 +58,43 @@ class NoForkFsSpec extends SparkSpec {
     Files.delete(plain); Files.delete(dir)
   }
 
+  test("getFileLinkStatus answers without readlink and matches Hadoop's; " +
+    "a FileContext rename goes through NoForkLocalFs") {
+    val dir = Files.createTempDirectory("noforklink")
+    val plain = Files.write(dir.resolve("plain"), Array[Byte](1, 2, 3))
+    val link = Files.createSymbolicLink(dir.resolve("link"), plain)
+    val dangling = Files.createSymbolicLink(dir.resolve("dangling"),
+      dir.resolve("gone"))
+    val fs = FileSystem.get(new URI("file:///"), hconf)
+    val hadoop = new org.apache.hadoop.fs.RawLocalFileSystem()
+    hadoop.initialize(new URI("file:///"), hconf)
+    // Hadoop's forking version sees links only on scheme-less paths
+    // (it hands "file:/…" to readlink verbatim); compare there, and
+    // check the qualified form answers the same
+    Seq(plain, link, dangling).foreach { p =>
+      val want = hadoop.getFileLinkStatus(new HPath(p.toString))
+      Seq(new HPath(p.toString), new HPath(p.toUri)).foreach { hp =>
+        val got = fs.getFileLinkStatus(hp)
+        assert(got.isSymlink == want.isSymlink, hp)
+        assert(got.getLen == want.getLen && got.isFile == want.isFile, hp)
+        if (want.isSymlink) assert(got.getSymlink == want.getSymlink, hp)
+      }
+    }
+    assert(!fs.getFileLinkStatus(new HPath(plain.toUri)).isSymlink)
+    assert(fs.getFileLinkStatus(new HPath(link.toUri)).getSymlink ==
+      new HPath(plain.toUri))
+    // the streaming metadata logs' rename path: FileContext over the
+    // AbstractFileSystem binding asks for link status of source and
+    // destination
+    val fc = org.apache.hadoop.fs.FileContext.getFileContext(hconf)
+    val src = dir.resolve("batch.tmp"); Files.write(src, Array[Byte](7))
+    val dst = dir.resolve("batch")
+    fc.rename(new HPath(src.toUri), new HPath(dst.toUri))
+    assert(!Files.exists(src) && Files.readAllBytes(dst).toSeq == Seq[Byte](7))
+    Seq(dst, dangling, link, plain).foreach(Files.delete)
+    Files.delete(dir)
+  }
+
   test("posixPerms decodes all nine bits") {
     assert(NoForkFs.posixPerms(Integer.parseInt("755", 8).toShort)
       === java.util.EnumSet.of(OWNER_READ, OWNER_WRITE, OWNER_EXECUTE,

@@ -307,6 +307,55 @@ class StreamsSpec extends SparkSpec {
     assert(graft.operators.VersionedTable.versions(table) == before)
   }
 
+  test("two streams (two checkpoints) merging and appending into one " +
+    "table both land; a retried (stream, batch) is still a no-op") {
+    import graft.operators.{Medallion, VersionedTable}
+    val dir = Files.createTempDirectory("graft_two_streams").toString
+    val schema = StructType(Seq(StructField("event_id", LongType),
+      StructField("ts", LongType), StructField("user_id", LongType)))
+    val cols = Seq("event_id", "ts", "user_id")
+    val ev = tables.events.select(cols.map(col): _*)
+    // disjoint halves, one source directory (and checkpoint) each
+    val halves = Seq(0, 1).map(r => ev.filter(col("event_id") % 2 === r))
+    halves.zipWithIndex.foreach { case (h, i) =>
+      h.repartition(2).write.mode("overwrite").json(s"$dir/src$i")
+    }
+    val (merged, appended) = (s"$dir/merged", s"$dir/appended")
+    Seq(0, 1).foreach { i =>
+      Streams.awaitDone(Streams.mergeStream(spark, s"$dir/src$i", schema,
+        merged, "user_id", "ts", "event_id", s"$dir/mck$i",
+        payloadCols = cols), 60000)
+      Streams.awaitDone(Streams.appendStream(spark, s"$dir/src$i", schema,
+        appended, s"$dir/ack$i", payloadCols = cols), 60000)
+    }
+    // the second stream's batch 0 is not mistaken for the first's
+    val expect = Medallion.dedupLatest(ev, "user_id", "ts", "event_id")
+    val got = VersionedTable.read(spark, merged)
+    assert(got.count() == expect.count())
+    assert(got.exceptAll(expect).count() == 0)
+    val all = VersionedTable.read(spark, appended)
+    assert(all.count() == ev.count() && all.exceptAll(ev).count() == 0)
+    // each stream's markers name it
+    Seq(merged -> "mck", appended -> "ack").foreach { case (t, ck) =>
+      val ops = VersionedTable.operations(t)
+      Seq(0, 1).foreach(i =>
+        assert(ops.exists(_.endsWith(s",stream=$dir/$ck$i]")), ops))
+    }
+    // a retried batch of either stream changes nothing
+    val (mv, av) = (VersionedTable.versions(merged),
+      VersionedTable.versions(appended))
+    Seq(0, 1).foreach { i =>
+      Streams.mergeBatch(spark, merged, "user_id", "ts", "event_id",
+        s"$dir/mck$i")(ev.limit(5), 0L)
+      Streams.appendBatch(spark, appended, s"$dir/ack$i")(ev.limit(5), 0L)
+    }
+    assert(VersionedTable.versions(merged) == mv)
+    assert(VersionedTable.versions(appended) == av)
+    // a third, fresh stream's batch 0 does land
+    Streams.appendBatch(spark, appended, s"$dir/ack2")(ev.limit(5), 0L)
+    assert(VersionedTable.read(spark, appended).count() == ev.count() + 5)
+  }
+
   test("appendStream: append-only bronze lifecycle — O(batch) commits " +
     "that re-link prior files, exactly-once on retry") {
     import org.apache.spark.sql.types._
