@@ -1972,11 +1972,27 @@ object Queries {
       Some(InlineOracles.cohort_retention)),
 
     Q("event_resample",
-      // time-series densification: hourly counts per type INCLUDING
-      // empty hours (sequence-generated grid, left join, zero-fill).
-      // The grid is per-group and bounded by the time span — tiny
-      // relative to the data at any scale
-      (s, d) => graft.operators.TimeSeries.hourlySeries(Tables(s, d).events),
+      (s, d) => {
+        // time-series densification: hourly counts per type INCLUDING
+        // empty hours (sequence-generated grid, left join, zero-fill).
+        // The grid is per-group and bounded by the time span — tiny
+        // relative to the data at any scale
+        val hourUs = 3600000000L
+        val ev = Tables(s, d).events
+        val hourly = ev.select(col("event_type"),
+            (col("ts") - pmod(col("ts"), lit(hourUs))).as("hour_us"))
+          .groupBy("event_type", "hour_us")
+          .agg(count(lit(1)).as("n_events"))
+        val grid = ev.groupBy(col("event_type"))
+          .agg(min(col("ts")).as("lo"), max(col("ts")).as("hi"))
+          .select(col("event_type"), explode(sequence(
+            col("lo") - pmod(col("lo"), lit(hourUs)),
+            col("hi") - pmod(col("hi"), lit(hourUs)),
+            lit(hourUs))).as("hour_us"))
+        grid.join(hourly, Seq("event_type", "hour_us"), "left")
+          .select(col("event_type"), col("hour_us"),
+            coalesce(col("n_events"), lit(0L)).as("n_events"))
+      },
       Some(InlineOracles.event_resample)),
 
     Q("event_interpolate",

@@ -59,13 +59,24 @@ object GraftParquetFormat {
   def numBits(items: Long, fpp: Double): Long =
     math.min(BloomFilter.optimalNumOfBits(items, fpp), 1L << 26)
 
+  /** Hashes per buffer chunk of a [[BloomWriter]] (512 KB). */
+  private val chunkItems = 1 << 16
+
   /** Sidecar `j` of the part file at `file`. */
   def sidecar(file: String, j: Int): String = s"$file.$j.bloom"
 
   /** Writes through `inner` and buffers each row's column hashes
     * until [[maxItems]] rows; the filters are then sized from the
     * file's row count (or the cap) and written beside the part file at
-    * close. A file with no rows gets no sidecar, as in the backfill. */
+    * close. A file with no rows gets no sidecar, as in the backfill.
+    *
+    * Memory, outside Spark's accounting: the buffer holds 8 bytes per
+    * row and bloom column in fixed chunks of [[chunkItems]] longs
+    * (never copied on growth), so one open writer holds at most
+    * `8 * min(rows, maxItems)` bytes plus one chunk per column — 32 MB
+    * per column for a file at the cap — and each filter's bits (at
+    * most 8 MB). The buffer is dropped as soon as the filters are
+    * filled, at the cap or at close. */
   private final class BloomWriter(inner: OutputWriter, file: String,
                                   schema: StructType, cols: Seq[String],
                                   fpp: Double, conf: Configuration)
@@ -74,24 +85,34 @@ object GraftParquetFormat {
       val i = schema.fieldIndex(c)
       new XxHash64(Seq(BoundReference(i, schema(i).dataType, nullable = true)))
     }.toIndexedSeq
-    private val buf = hashes.map(_ => new scala.collection.mutable.ArrayBuilder.ofLong)
+    private var buf = hashes.map(_ =>
+      scala.collection.mutable.ArrayBuffer.empty[Array[Long]])
     private var n = 0L
     private var filters = IndexedSeq.empty[BloomFilter]
 
     private def fill(items: Long): Unit = {
-      filters = buf.map { b =>
+      filters = buf.map { chunks =>
         val f = BloomFilter.create(items, numBits(items, fpp))
-        b.result().foreach(f.putLong)
-        b.clear()
+        var i = 0L
+        while (i < n) {
+          f.putLong(chunks((i / chunkItems).toInt)((i % chunkItems).toInt))
+          i += 1
+        }
         f
       }
+      buf = IndexedSeq.empty
     }
 
     override def write(row: InternalRow): Unit = {
       inner.write(row)
+      val at = (n % chunkItems).toInt
       hashes.indices.foreach { j =>
         val h = hashes(j).eval(row).asInstanceOf[Long]
-        if (filters.isEmpty) buf(j) += h else filters(j).putLong(h)
+        if (filters.nonEmpty) filters(j).putLong(h)
+        else {
+          if (at == 0) buf(j) += new Array[Long](chunkItems)
+          buf(j).last(at) = h
+        }
       }
       if (filters.isEmpty) {
         n += 1

@@ -25,49 +25,11 @@ import org.apache.spark.sql.functions._
   */
 object TimeSeries {
 
-  private val hourUs = 3600000000L
-
-  /** (event_type, hour_us, n_raw): events per type and UTC hour — the
-    * hourly-count frame every `*FromHourly` monitor consumes. */
-  private def hourlyCounts(events: DataFrame): DataFrame =
-    events.select(col("event_type"),
-        (col("ts") - pmod(col("ts"), lit(hourUs))).as("hour_us"))
-      .groupBy("event_type", "hour_us")
-      .agg(count(lit(1)).as("n_raw"))
-
-  /** (event_type, hour_us, n_events): [[hourlyCounts]] zero-filled over
-    * every hour from a type's first to its last event. */
-  private[graft] def hourlySeries(events: DataFrame): DataFrame = {
-    val grid = events.groupBy(col("event_type"))
-      .agg(min(col("ts")).as("lo"), max(col("ts")).as("hi"))
-      .select(col("event_type"), explode(sequence(
-        col("lo") - pmod(col("lo"), lit(hourUs)),
-        col("hi") - pmod(col("hi"), lit(hourUs)),
-        lit(hourUs))).as("hour_us"))
-    grid.join(hourlyCounts(events), Seq("event_type", "hour_us"), "left")
-      .select(col("event_type"), col("hour_us"),
-        coalesce(col("n_raw"), lit(0L)).as("n_events"))
-  }
-
-  /** An (event_type, hour_us, n_raw) frame zero-filled over every hour
-    * between a type's first and last observed hour, the count named
-    * `name`. Observed-hour bounds equal the raw-timestamp bounds
-    * floored, so this matches [[hourlySeries]] on the same events. */
-  private def zeroFilled(hourly: DataFrame, name: String): DataFrame = {
-    val grid = hourly.groupBy(col("event_type"))
-      .agg(min(col("hour_us")).as("lo"), max(col("hour_us")).as("hi"))
-      .select(col("event_type"),
-        explode(sequence(col("lo"), col("hi"), lit(hourUs)))
-          .as("hour_us"))
-    grid.join(hourly, Seq("event_type", "hour_us"), "left")
-      .select(col("event_type"), col("hour_us"),
-        coalesce(col("n_raw"), lit(0L)).as(name))
-  }
-
   /** Hourly mean-value series per event_type with empty hours filled
     * by linear interpolation: (event_type, hour_us, value_f,
     * observed). */
   def interpolate(events: DataFrame): DataFrame = {
+    val hourUs = 3600000000L
     val hourly = events.select(col("event_type"),
         (col("ts") - pmod(col("ts"), lit(hourUs))).as("hour_us"),
         col("value"))
@@ -117,8 +79,21 @@ object TimeSeries {
                             horizon: Int = 24): DataFrame = {
     require(horizon >= 1 && horizon <= period,
       "horizon must be in [1, period] — seasonal-naive repeats the last observed period")
+    val hourUs = 3600000000L
     val periodUs = period.toLong * hourUs
-    val series = hourlySeries(events)
+    val hourly = events.select(col("event_type"),
+        (col("ts") - pmod(col("ts"), lit(hourUs))).as("hour_us"))
+      .groupBy("event_type", "hour_us")
+      .agg(count(lit(1)).as("n_raw"))
+    val grid = events.groupBy(col("event_type"))
+      .agg(min(col("ts")).as("lo"), max(col("ts")).as("hi"))
+      .select(col("event_type"), explode(sequence(
+        col("lo") - pmod(col("lo"), lit(hourUs)),
+        col("hi") - pmod(col("hi"), lit(hourUs)),
+        lit(hourUs))).as("hour_us"))
+    val series = grid.join(hourly, Seq("event_type", "hour_us"), "left")
+      .select(col("event_type"), col("hour_us"),
+        coalesce(col("n_raw"), lit(0L)).as("n_events"))
     val lastH = series.groupBy(col("event_type"))
       .agg(max(col("hour_us")).as("t_last"))
     val lastPeriod = series.join(broadcast(lastH), "event_type")
@@ -158,7 +133,20 @@ object TimeSeries {
     * count), partitioned by the series key. Raw events are scanned
     * once. */
   def changepoint(events: DataFrame): DataFrame = {
-    val series = hourlySeries(events)
+    val hourUs = 3600000000L
+    val hourly = events.select(col("event_type"),
+        (col("ts") - pmod(col("ts"), lit(hourUs))).as("hour_us"))
+      .groupBy("event_type", "hour_us")
+      .agg(count(lit(1)).as("n_raw"))
+    val grid = events.groupBy(col("event_type"))
+      .agg(min(col("ts")).as("lo"), max(col("ts")).as("hi"))
+      .select(col("event_type"), explode(sequence(
+        col("lo") - pmod(col("lo"), lit(hourUs)),
+        col("hi") - pmod(col("hi"), lit(hourUs)),
+        lit(hourUs))).as("hour_us"))
+    val series = grid.join(hourly, Seq("event_type", "hour_us"), "left")
+      .select(col("event_type"), col("hour_us"),
+        coalesce(col("n_raw"), lit(0L)).as("n_events"))
     val w = Window.partitionBy("event_type").orderBy("hour_us")
     val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val totals = series.groupBy(col("event_type"))
@@ -206,7 +194,20 @@ object TimeSeries {
     * counts; the grid is span-bounded; the profile collapse and the
     * peak rank run over at most |types| × 24 rows. */
   def seasonalProfile(events: DataFrame): DataFrame = {
-    val series = hourlySeries(events)
+    val hourUs = 3600000000L
+    val hourly = events.select(col("event_type"),
+        (col("ts") - pmod(col("ts"), lit(hourUs))).as("hour_us"))
+      .groupBy("event_type", "hour_us")
+      .agg(count(lit(1)).as("n_raw"))
+    val grid = events.groupBy(col("event_type"))
+      .agg(min(col("ts")).as("lo"), max(col("ts")).as("hi"))
+      .select(col("event_type"), explode(sequence(
+        col("lo") - pmod(col("lo"), lit(hourUs)),
+        col("hi") - pmod(col("hi"), lit(hourUs)),
+        lit(hourUs))).as("hour_us"))
+    val series = grid.join(hourly, Seq("event_type", "hour_us"), "left")
+      .select(col("event_type"), col("hour_us"),
+        coalesce(col("n_raw"), lit(0L)).as("n_events"))
     val prof = series
       .withColumn("hour_of_day",
         pmod(expr(s"hour_us div $hourUs"), lit(24L)))
@@ -289,8 +290,13 @@ object TimeSeries {
     * together.
     */
   def anomaly(events: DataFrame, trailing: Int = 24,
-              zThresh: Double = 3.0, minHist: Int = 12): DataFrame =
-    anomalyFromHourly(hourlyCounts(events), trailing, zThresh, minHist)
+              zThresh: Double = 3.0, minHist: Int = 12): DataFrame = {
+    val hourUs = 3600000000L
+    anomalyFromHourly(events.select(col("event_type"),
+        (col("ts") - pmod(col("ts"), lit(hourUs))).as("hour_us"))
+      .groupBy("event_type", "hour_us")
+      .agg(count(lit(1)).as("n_raw")), trailing, zThresh, minHist)
+  }
 
   /** The same monitoring chain from an (event_type, hour_us, n_raw)
     * HOURLY-COUNT frame — the merge target for streaming count
@@ -303,7 +309,15 @@ object TimeSeries {
                         minHist: Int = 12): DataFrame = {
     require(trailing >= minHist && minHist >= 2,
       "need trailing >= minHist >= 2 hours of history")
-    val series = zeroFilled(hourly, "n_events")
+    val hourUs = 3600000000L
+    val grid = hourly.groupBy(col("event_type"))
+      .agg(min(col("hour_us")).as("lo"), max(col("hour_us")).as("hi"))
+      .select(col("event_type"),
+        explode(sequence(col("lo"), col("hi"), lit(hourUs)))
+          .as("hour_us"))
+    val series = grid.join(hourly, Seq("event_type", "hour_us"), "left")
+      .select(col("event_type"), col("hour_us"),
+        coalesce(col("n_raw"), lit(0L)).as("n_events"))
     val trail = Window.partitionBy("event_type").orderBy("hour_us")
       .rowsBetween(-trailing, -1)
     val dec = col("n_events").cast("decimal(19,0)")
@@ -370,8 +384,13 @@ object TimeSeries {
     * map-side-combined groupBy; the zero-fill, the lag self-join and
     * both sums live on the |types|·|hours| grid frame; per-type
     * stats broadcast. No global sort anywhere. */
-  def autocorr(events: DataFrame, maxLag: Int = 24): DataFrame =
-    autocorrFromHourly(hourlyCounts(events), maxLag)
+  def autocorr(events: DataFrame, maxLag: Int = 24): DataFrame = {
+    val hourUs = 3600000000L
+    autocorrFromHourly(events.select(col("event_type"),
+        (col("ts") - pmod(col("ts"), lit(hourUs))).as("hour_us"))
+      .groupBy("event_type", "hour_us")
+      .agg(count(lit(1)).as("n_raw")), maxLag)
+  }
 
   /** [[autocorr]] from an (event_type, hour_us, n_raw) hourly-count
     * frame — the third monitor on the shared streaming count-shard
@@ -379,7 +398,15 @@ object TimeSeries {
   def autocorrFromHourly(hourly: DataFrame,
                          maxLag: Int = 24): DataFrame = {
     require(maxLag >= 1, "need at least lag 1")
-    val series = zeroFilled(hourly, "x")
+    val hourUs = 3600000000L
+    val grid = hourly.groupBy(col("event_type"))
+      .agg(min(col("hour_us")).as("lo"), max(col("hour_us")).as("hi"))
+      .select(col("event_type"),
+        explode(sequence(col("lo"), col("hi"), lit(hourUs)))
+          .as("hour_us"))
+    val series = grid.join(hourly, Seq("event_type", "hour_us"), "left")
+      .select(col("event_type"), col("hour_us"),
+        coalesce(col("n_raw"), lit(0L)).as("x"))
     val stats = series.groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"))
     val dev = series.join(broadcast(stats), "event_type")
@@ -426,8 +453,13 @@ object TimeSeries {
     * lag join is hash-equi on the shifted hour (per-hour fan-out =
     * |types|², never a data×data product); per-type denominators
     * broadcast. */
-  def crosscorr(events: DataFrame, maxLag: Int = 12): DataFrame =
-    crosscorrFromHourly(hourlyCounts(events), maxLag)
+  def crosscorr(events: DataFrame, maxLag: Int = 12): DataFrame = {
+    val hourUs = 3600000000L
+    crosscorrFromHourly(events.select(col("event_type"),
+        (col("ts") - pmod(col("ts"), lit(hourUs))).as("hour_us"))
+      .groupBy("event_type", "hour_us")
+      .agg(count(lit(1)).as("n_raw")), maxLag)
+  }
 
   /** [[crosscorr]] from an (event_type, hour_us, n_raw) hourly-count
     * frame — shares the streaming count-shard store with
@@ -437,7 +469,15 @@ object TimeSeries {
   def crosscorrFromHourly(hourly: DataFrame,
                           maxLag: Int = 12): DataFrame = {
     require(maxLag >= 0, "maxLag must be non-negative")
-    val series = zeroFilled(hourly, "x")
+    val hourUs = 3600000000L
+    val grid = hourly.groupBy(col("event_type"))
+      .agg(min(col("hour_us")).as("lo"), max(col("hour_us")).as("hi"))
+      .select(col("event_type"),
+        explode(sequence(col("lo"), col("hi"), lit(hourUs)))
+          .as("hour_us"))
+    val series = grid.join(hourly, Seq("event_type", "hour_us"), "left")
+      .select(col("event_type"), col("hour_us"),
+        coalesce(col("n_raw"), lit(0L)).as("x"))
     val stats = series.groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"))
     val dev = series.join(broadcast(stats), "event_type")
@@ -503,8 +543,13 @@ object TimeSeries {
     * over GRID rows (types × span hours), partitioned on the series
     * key; the (types × period)-row seasonal frame broadcasts back.
     * Raw events are scanned once. */
-  def decompose(events: DataFrame, period: Int = 24): DataFrame =
-    decomposeFromHourly(hourlyCounts(events), period)
+  def decompose(events: DataFrame, period: Int = 24): DataFrame = {
+    val hourUs = 3600000000L
+    decomposeFromHourly(events.select(col("event_type"),
+        (col("ts") - pmod(col("ts"), lit(hourUs))).as("hour_us"))
+      .groupBy("event_type", "hour_us")
+      .agg(count(lit(1)).as("n_raw")), period)
+  }
 
   /** [[decompose]] from an (event_type, hour_us, n_raw) hourly-count
     * frame — the fourth consumer of the shared streaming count-shard
@@ -516,7 +561,15 @@ object TimeSeries {
                           period: Int = 24): DataFrame = {
     require(period >= 2 && period % 2 == 0,
       "period must be even: the centered MA frame is -period/2 .. period/2-1")
-    val series = zeroFilled(hourly, "n_events")
+    val hourUs = 3600000000L
+    val grid = hourly.groupBy(col("event_type"))
+      .agg(min(col("hour_us")).as("lo"), max(col("hour_us")).as("hi"))
+      .select(col("event_type"),
+        explode(sequence(col("lo"), col("hi"), lit(hourUs)))
+          .as("hour_us"))
+    val series = grid.join(hourly, Seq("event_type", "hour_us"), "left")
+      .select(col("event_type"), col("hour_us"),
+        coalesce(col("n_raw"), lit(0L)).as("n_events"))
     val w = Window.partitionBy("event_type").orderBy("hour_us")
       .rowsBetween(-(period / 2), period / 2 - 1)
     val framed = series

@@ -130,21 +130,6 @@ object VersionedTable {
 
   def latestVersion(path: String): Option[Int] = versions(path).lastOption
 
-  /** The latest committed version; throws when there is none. */
-  private[graft] def latest(path: String): Int = latestVersion(path)
-    .getOrElse(throw new IllegalArgumentException(
-      s"no committed versions at $path"))
-
-  /** `asOf` (default: the latest version), checked readable:
-    * committed, and not marked unreadable by [[vacuum]]. */
-  private def readableVersion(path: String, asOf: Option[Int]): Int = {
-    val v = asOf.getOrElse(latest(path))
-    require(versions(path).contains(v), s"version $v not committed at $path")
-    require(!vacuumedVersions(path).contains(v),
-      s"version $v was vacuumed at $path")
-    v
-  }
-
   /** Versions marked unreadable by [[vacuum]] (history stays listable). */
   def vacuumedVersions(path: String): Set[Int] = {
     val f = vacuumedFile(path)
@@ -227,44 +212,78 @@ object VersionedTable {
     sb.toString
   }
 
-  /** `,"field":{…}` for a non-empty map, keys sorted ("" when empty). */
-  private def jsonObj[T](field: String, m: Map[String, T])
-                        (value: T => String): String =
-    if (m.isEmpty) ""
-    else m.toSeq.sortBy(_._1).map { case (k, x) =>
-      s""""${jsonEscape(k)}":${value(x)}"""
-    }.mkString(s""","$field":{""", ",", "}")
-
-  private def jsonStr(x: String) = s""""${jsonEscape(x)}""""
-
   private def fileEntryJson(e: FileEntry): String = {
     val dv = e.dv.fold("")(d => s""","dv":"$d"""")
-    val stats = jsonObj("stats", e.stats) { case (lo, hi) => s"[$lo,$hi]" }
-    val sstats = jsonObj("sstats", e.sstats) { case (lo, hi) =>
-      s"[${jsonStr(lo)},${jsonStr(hi)}]" }
+    val stats =
+      if (e.stats.isEmpty) ""
+      else e.stats.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
+        s""""${jsonEscape(c)}":[$lo,$hi]"""
+      }.mkString(""","stats":{""", ",", "}")
+    val part =
+      if (e.part.isEmpty) ""
+      else e.part.toSeq.sortBy(_._1).map { case (c, v) =>
+        s""""${jsonEscape(c)}":"${jsonEscape(v)}""""
+      }.mkString(""","part":{""", ",", "}")
+    val bloom =
+      if (e.bloom.isEmpty) ""
+      else e.bloom.toSeq.sortBy(_._1).map { case (c, v) =>
+        s""""${jsonEscape(c)}":"${jsonEscape(v)}""""
+      }.mkString(""","bloom":{""", ",", "}")
+    val sstats =
+      if (e.sstats.isEmpty) ""
+      else e.sstats.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
+        s""""${jsonEscape(c)}":["${jsonEscape(lo)}","${jsonEscape(hi)}"]"""
+      }.mkString(""","sstats":{""", ",", "}")
     s"""{"name":"${e.name}"$dv,"rows":${e.rows},"phys":${e.phys},""" +
-      s""""bytes":${e.bytes}$stats${jsonObj("part", e.part)(jsonStr)}""" +
-      s"""${jsonObj("bloom", e.bloom)(jsonStr)}$sstats}"""
+      s""""bytes":${e.bytes}$stats$part$bloom$sstats}"""
   }
 
-  /** `node.field` as a map, each value read by `value` (empty when
-    * the field is absent). */
-  private def mapOf[T](node: JsonNode, field: String)
-                      (value: JsonNode => T): Map[String, T] =
-    Option(node.get(field)).fold(Map.empty[String, T]) { n =>
-      val it = n.fields()
-      val b = Map.newBuilder[String, T]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> value(e.getValue) }
-      b.result()
+  private def parseFileEntry(n: JsonNode): FileEntry = {
+    def strMap(field: String): Map[String, String] = {
+      val node = n.get(field)
+      if (node == null) Map.empty
+      else {
+        val it = node.fields()
+        val b = Map.newBuilder[String, String]
+        while (it.hasNext) {
+          val e = it.next(); b += e.getKey -> e.getValue.asText
+        }
+        b.result()
+      }
     }
-
-  private def parseFileEntry(n: JsonNode): FileEntry =
+    val stats = {
+      val node = n.get("stats")
+      if (node == null) Map.empty[String, (Double, Double)]
+      else {
+        val it = node.fields()
+        val b = Map.newBuilder[String, (Double, Double)]
+        while (it.hasNext) {
+          val e = it.next()
+          b += e.getKey ->
+            (e.getValue.get(0).asDouble, e.getValue.get(1).asDouble)
+        }
+        b.result()
+      }
+    }
+    val sstats = {
+      val node = n.get("sstats")
+      if (node == null) Map.empty[String, (String, String)]
+      else {
+        val it = node.fields()
+        val b = Map.newBuilder[String, (String, String)]
+        while (it.hasNext) {
+          val e = it.next()
+          b += e.getKey ->
+            (e.getValue.get(0).asText, e.getValue.get(1).asText)
+        }
+        b.result()
+      }
+    }
     FileEntry(n.get("name").asText,
       Option(n.get("dv")).map(_.asText),
       n.get("rows").asLong, n.get("phys").asLong, n.get("bytes").asLong,
-      mapOf(n, "stats")(x => (x.get(0).asDouble, x.get(1).asDouble)),
-      mapOf(n, "part")(_.asText), mapOf(n, "bloom")(_.asText),
-      mapOf(n, "sstats")(x => (x.get(0).asText, x.get(1).asText)))
+      stats, strMap("part"), strMap("bloom"), sstats)
+  }
 
   private def parseEntry(path: String, v: Int): LogEntry = {
     val root = mapper.readTree(logLine(path, v))
@@ -272,7 +291,15 @@ object VersionedTable {
       Option(root.get(field)).map { arr =>
         (0 until arr.size).map(i => parseFileEntry(arr.get(i)))
       }
-    def strMap(field: String) = mapOf(root, field)(_.asText)
+    def strMap(field: String): Map[String, String] =
+      Option(root.get(field)).fold(Map.empty[String, String]) { node =>
+        val it = node.fields()
+        val b = Map.newBuilder[String, String]
+        while (it.hasNext) {
+          val e = it.next(); b += e.getKey -> e.getValue.asText
+        }
+        b.result()
+      }
     val props = TableProps(strMap("constraints"), strMap("colmap"),
       Option(root.get("used_phys")).map(a =>
         (0 until a.size).map(a.get(_).asText).toSet).getOrElse(Set.empty),
@@ -322,18 +349,24 @@ object VersionedTable {
       case None =>
         s""""add":${add.map(fileEntryJson).mkString("[", ",", "]")}"""
     }
-    val propsJson = jsonObj("constraints", props.constraints)(jsonStr) +
-      jsonObj("colmap", props.colmap)(jsonStr) +
-      jsonObj("tblprops", props.tbl)(jsonStr) +
+    def strMapJson(field: String, m: Map[String, String]): String =
+      if (m.isEmpty) ""
+      else m.toSeq.sortBy(_._1).map { case (k, x) =>
+        s""""${jsonEscape(k)}":"${jsonEscape(x)}""""
+      }.mkString(s""""$field":{""", ",", "},")
+    val propsJson = strMapJson("constraints", props.constraints) +
+      strMapJson("colmap", props.colmap) +
+      strMapJson("tblprops", props.tbl) +
       (if (props.usedPhys.isEmpty) ""
-       else props.usedPhys.toSeq.sorted.map(jsonStr)
-         .mkString(""","used_phys":[""", ",", "]"))
+       else props.usedPhys.toSeq.sorted
+         .map(n => s""""${jsonEscape(n)}"""")
+         .mkString(""""used_phys":[""", ",", "],"))
     val entry =
       s"""{"version":$v,"operation":"${jsonEscape(operation)}","num_rows":$rows,""" +
         s""""committed_at":"${java.time.Instant.now()}",""" +
-        s""""schema":"${jsonEscape(schema.json)}"""" +
+        s""""schema":"${jsonEscape(schema.json)}",""" +
         propsJson +
-        s""","remove":$removeJson,$tailJson}"""
+        s""""remove":$removeJson,$tailJson}"""
     Files.write(logDir(path).resolve(f"$v%06d.json"),
       java.util.List.of(entry), StandardOpenOption.CREATE_NEW)
   }
@@ -721,18 +754,6 @@ object VersionedTable {
     out
   }
 
-  /** `props` with physical names for NEW logical columns `names`
-    * committed at version `v`: the logical name itself, or `name_vN`
-    * when an earlier (dropped) column used it — the usedPhys tombstone
-    * keeps a new column from reading a dropped column's bytes. */
-  private def withNewColumns(props: TableProps, names: Seq[String],
-                             v: Int): TableProps =
-    names.foldLeft(props) { (p, c) =>
-      val phys = if (p.usedPhys.contains(c)) s"${c}_v$v" else c
-      p.copy(colmap = if (phys == c) p.colmap else p.colmap + (c -> phys),
-        usedPhys = p.usedPhys + phys)
-    }
-
   /** Write `df` as the next version (full snapshot — ingest/CTAS
     * shape). Returns the new version number. The exact committed row
     * count comes from the parquet footers of the files just written —
@@ -793,7 +814,8 @@ object VersionedTable {
     * survive, and the pre-truncate snapshot stays time-travelable
     * until vacuumed. Zero data I/O at any table size. */
   def truncate(path: String): Int = {
-    val v = latest(path)
+    val v = latestVersion(path).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
     commitActions(path, "TRUNCATE", v,
       manifestEntries(path, v).map(_.name).toSet, Nil, schemaOf(path, v))
   }
@@ -852,7 +874,9 @@ object VersionedTable {
     val baseProps = propsOf(path, baseV)
     var attempts = 0
     while (attempts < 1000) {
-      val latest = this.latest(path)
+      val latest = latestVersion(path).getOrElse(
+        throw new IllegalArgumentException(
+          s"no committed versions at $path"))
       if (latest != baseV) {
         // a METADATA change (rename/drop/constraint/schema) cannot be
         // rebased onto concurrent commits, and a data commit planned
@@ -1045,7 +1069,11 @@ object VersionedTable {
     * sharing — Delta's post-VACUUM retention contract. */
   def read(spark: SparkSession, path: String,
            asOf: Option[Int] = None): DataFrame = {
-    val v = readableVersion(path, asOf)
+    val v = asOf.orElse(latestVersion(path)).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
+    require(versions(path).contains(v), s"version $v not committed at $path")
+    require(!vacuumedVersions(path).contains(v),
+      s"version $v was vacuumed at $path")
     readFiles(spark, path, manifest(path, v).map(_._1), schemaOf(path, v),
       v, propsOf(path, v))
   }
@@ -1230,7 +1258,8 @@ object VersionedTable {
   def append(spark: SparkSession, df: DataFrame, path: String,
              operation: String = "APPEND",
              partitionBy: Seq[String] = Nil): Int = {
-    val v = latest(path)
+    val v = latestVersion(path).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
     val schema = schemaOf(path, v)
     require(df.schema.length == schema.length &&
         schemaKey(df.schema) == schemaKey(schema),
@@ -1253,7 +1282,8 @@ object VersionedTable {
     * evolution path. */
   def appendEvolve(spark: SparkSession, df: DataFrame, path: String,
                    operation: String = "APPEND[EVOLVE]"): Int = {
-    val v = latest(path)
+    val v = latestVersion(path).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
     val schema = schemaOf(path, v)
     val conflicts = schema.flatMap { f =>
       df.schema.find(_.name == f.name).collect {
@@ -1271,7 +1301,14 @@ object VersionedTable {
       if (df.columns.contains(f.name)) col(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }: _*)
-    val p = withNewColumns(propsOf(path, v), newFields.map(_.name), v + 1)
+    val props = propsOf(path, v)
+    var p = props
+    newFields.map(_.name).foreach { c =>
+      val phys = if (p.usedPhys.contains(c)) s"${c}_v${v + 1}" else c
+      p = p.copy(
+        colmap = if (phys == c) p.colmap else p.colmap + (c -> phys),
+        usedPhys = p.usedPhys + phys)
+    }
     val fresh = writeDataFiles(aligned, path, v + 1, props = p)
     enforceConstraints(spark, path, v + 1, fresh, newSchema, p)
     commitActions(path, operation, v, Set.empty, fresh, newSchema,
@@ -1300,8 +1337,19 @@ object VersionedTable {
     * query-time footer I/O (what Delta/Iceberg get from log stats). */
   def readWhere(spark: SparkSession, path: String, column: String,
                 lo: Double, hi: Double,
-                asOf: Option[Int] = None): DataFrame =
-    readWhereMulti(spark, path, Seq((column, lo, hi)), asOf)
+                asOf: Option[Int] = None): DataFrame = {
+    val v = asOf.orElse(latestVersion(path)).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
+    require(versions(path).contains(v), s"version $v not committed at $path")
+    require(!vacuumedVersions(path).contains(v),
+      s"version $v was vacuumed at $path")
+    val keep = fileStats(path, v, column).collect {
+      case (n, None) => n
+      case (n, Some((mn, mx))) if mx >= lo && mn <= hi => n
+    }
+    readFiles(spark, path, keep, schemaOf(path, v), v, propsOf(path, v))
+      .filter(col(column) >= lo && col(column) <= hi)
+  }
 
   /** Multi-column stats-pruned read: shortlist files whose manifest
     * [min, max] overlaps EVERY range (conjunctive pruning — the 2-D+
@@ -1313,12 +1361,25 @@ object VersionedTable {
                      ranges: Seq[(String, Double, Double)],
                      asOf: Option[Int] = None): DataFrame = {
     require(ranges.nonEmpty, "readWhereMulti needs at least one range")
-    val v = readableVersion(path, asOf)
+    val v = asOf.orElse(latestVersion(path)).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
+    require(versions(path).contains(v), s"version $v not committed at $path")
+    require(!vacuumedVersions(path).contains(v),
+      s"version $v was vacuumed at $path")
+    val props = propsOf(path, v)
+    val keep = manifestEntries(path, v).filter { e =>
+      ranges.forall { case (c, lo, hi) =>
+        e.stats.get(props.phys(c)) match {
+          case Some((mn, mx)) => mx >= lo && mn <= hi
+          case None => true // stat-less: unprunable, never wrong
+        }
+      }
+    }.map(_.name)
     val filter = ranges.map { case (c, lo, hi) =>
       col(c) >= lo && col(c) <= hi
     }.reduce(_ && _)
-    readFiles(spark, path, prunedStatsEntries(path, v, ranges),
-      schemaOf(path, v), v, propsOf(path, v)).filter(filter)
+    readFiles(spark, path, keep, schemaOf(path, v), v, props)
+      .filter(filter)
   }
 
   /** Entry names [[readWhereMulti]] would scan (exposed for pruning
@@ -1348,7 +1409,11 @@ object VersionedTable {
   def readWhereStr(spark: SparkSession, path: String, column: String,
                    lo: String, hi: String,
                    asOf: Option[Int] = None): DataFrame = {
-    val v = readableVersion(path, asOf)
+    val v = asOf.orElse(latestVersion(path)).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
+    require(versions(path).contains(v), s"version $v not committed at $path")
+    require(!vacuumedVersions(path).contains(v),
+      s"version $v was vacuumed at $path")
     val keep = prunedStringEntries(path, v, column, lo, hi).map(_.name)
     readFiles(spark, path, keep, schemaOf(path, v), v, propsOf(path, v))
       .filter(col(column) >= lo && col(column) <= hi)
@@ -1376,10 +1441,17 @@ object VersionedTable {
   def readPartition(spark: SparkSession, path: String,
                     values: Map[String, String],
                     asOf: Option[Int] = None): DataFrame = {
-    val v = readableVersion(path, asOf)
-    val pruned = readEntries(spark, path,
-      prunedPartitionEntries(path, v, values), schemaOf(path, v), v,
-      props = propsOf(path, v))
+    val v = asOf.orElse(latestVersion(path)).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
+    require(versions(path).contains(v), s"version $v not committed at $path")
+    require(!vacuumedVersions(path).contains(v),
+      s"version $v was vacuumed at $path")
+    val props = propsOf(path, v)
+    val keep = manifestEntries(path, v).filter(e =>
+      values.forall { case (k, want) =>
+        e.part.get(props.phys(k)).forall(_ == want) })
+    val pruned = readEntries(spark, path, keep, schemaOf(path, v), v,
+      props = props)
     values.foldLeft(pruned) { case (df, (k, want)) =>
       df.filter(col(k).cast("string") === lit(want))
     }
@@ -1518,7 +1590,8 @@ object VersionedTable {
     * [[bloomColumnsProp]] to be set. Returns the new version (or the
     * current one when nothing was missing). */
   def buildBloomIndex(spark: SparkSession, path: String): Int = {
-    val v = latest(path)
+    val v = latestVersion(path).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
     val props = propsOf(path, v)
     val logical = bloomConfig(props)
     require(logical.nonEmpty,
@@ -1537,17 +1610,48 @@ object VersionedTable {
   }
 
   /** Entries of version `v` that might contain any of `values` in
-    * `column`: the `column IN (values)` case of
-    * [[pruneEntriesForFilters]] — stats, string zone maps and
-    * partition values (through the column's typed cast) prune first,
-    * then the survivors' bloom sidecars are probed. Files without an
-    * index for the column always survive — pruning can drop rows
-    * never. */
+    * `column`: [min, max] stats and partition values prune first
+    * (pure manifest metadata), then the survivors' bloom sidecars are
+    * probed IN PARALLEL (one tiny task per batch of sidecar files —
+    * the probe ships only the 8-byte hashes, each executor reads just
+    * its sidecars, and what returns is a shortlist of names, so the
+    * driver never loads index bytes). Files without an index for the
+    * column always survive — pruning can drop rows never. */
   def prunedBloomEntries(spark: SparkSession, path: String, v: Int,
                          column: String, values: Seq[Any])
-      : Seq[FileEntry] =
-    pruneEntriesForFilters(spark, path, v,
-      Seq(org.apache.spark.sql.sources.In(column, values.toArray)))
+      : Seq[FileEntry] = {
+    val props = propsOf(path, v)
+    val pc = props.phys(column)
+    val dt = schemaOf(path, v)(column).dataType
+    // partition values were recorded as the column rendered to string
+    // by the partitioned write; compare through the SAME typed cast
+    // the bloom hash uses — an untyped String.valueOf(x) == pv would
+    // wrongly prune a type-lax literal (Int 7 vs a double partition's
+    // "7.0"). A literal the column type cannot represent disables
+    // partition pruning for the whole lookup (never prunes wrongly).
+    val partStrs: Option[Set[String]] = {
+      val rendered = values.map(x => typedString(x, dt))
+      if (rendered.contains(None)) None
+      else Some(rendered.flatten.toSet)
+    }
+    val statted = manifestEntries(path, v).filter { e =>
+      val statOk = e.stats.get(pc).forall { case (mn, mx) =>
+        values.exists(x => looseNum(x).forall(d => d >= mn && d <= mx))
+      }
+      // string zone maps prune point lookups too (bounds are
+      // truncation-safe, so containment is conservative-correct)
+      val sstatOk = e.sstats.get(pc).forall { case (mn, mx) =>
+        values.exists {
+          case s: String => s >= mn && s <= mx
+          case _ => true
+        }
+      }
+      val partOk = e.part.get(pc).forall(pv =>
+        partStrs.forall(_.contains(pv)))
+      statOk && sstatOk && partOk
+    }
+    bloomSurvivors(spark, path, v, statted, pc, dt, values)
+  }
 
   /** Driver-side Catalyst eval of a literal expression — the
     * planner-path renderers below must not pay a Spark JOB per
@@ -1649,12 +1753,9 @@ object VersionedTable {
     val conj = filters.flatMap(flat)
     def dtOf(c: String): Option[DataType] =
       schema.fields.find(_.name == c).map(_.dataType)
-    // partition values were recorded as the column rendered to string
-    // by the partitioned write: compare through the same typed cast
-    // (an untyped String.valueOf(x) would wrongly prune Int 7 against
-    // a double partition's "7.0"; a literal the type cannot represent
-    // prunes nothing). Memoized: this runs per ENTRY and must stay a
-    // pure local lookup
+    // rendered through the column's typed cast — matches how the
+    // partitioned write recorded the value (see prunedBloomEntries);
+    // memoized: this runs per ENTRY and must stay a pure local lookup
     val renderCache =
       scala.collection.mutable.HashMap[(String, Any), Option[String]]()
     def partRender(c: String, x: Any): Option[String] =
@@ -1766,7 +1867,11 @@ object VersionedTable {
   def readIn(spark: SparkSession, path: String, column: String,
              values: Seq[Any], asOf: Option[Int] = None): DataFrame = {
     require(values.nonEmpty, "readIn needs at least one value")
-    val v = readableVersion(path, asOf)
+    val v = asOf.orElse(latestVersion(path)).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
+    require(versions(path).contains(v), s"version $v not committed at $path")
+    require(!vacuumedVersions(path).contains(v),
+      s"version $v was vacuumed at $path")
     val keep = prunedBloomEntries(spark, path, v, column, values)
     readEntries(spark, path, keep, schemaOf(path, v), v,
       props = propsOf(path, v))
@@ -1791,7 +1896,11 @@ object VersionedTable {
                keys: DataFrame, asOf: Option[Int] = None): DataFrame = {
     require(keys.columns.contains(column),
       s"keys frame must carry a '$column' column")
-    val v = readableVersion(path, asOf)
+    val v = asOf.orElse(latestVersion(path)).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
+    require(versions(path).contains(v), s"version $v not committed at $path")
+    require(!vacuumedVersions(path).contains(v),
+      s"version $v was vacuumed at $path")
     val props = propsOf(path, v)
     val schema = schemaOf(path, v)
     val keyFrame = keys.select(col(column)).distinct()
@@ -1824,7 +1933,11 @@ object VersionedTable {
     * links (re-export after vacuum). Returns the listed paths. */
   def exportManifest(spark: SparkSession, path: String, outDir: String,
                      asOf: Option[Int] = None): Seq[String] = {
-    val v = readableVersion(path, asOf)
+    val v = asOf.orElse(latestVersion(path)).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
+    require(versions(path).contains(v), s"version $v not committed at $path")
+    require(!vacuumedVersions(path).contains(v),
+      s"version $v was vacuumed at $path")
     val entries = manifestEntries(path, v)
     val schema = schemaOf(path, v)
     val props = propsOf(path, v)
@@ -1900,7 +2013,8 @@ object VersionedTable {
                           sortCols: Seq[String], minFileBytes: Long,
                           numFiles: Int,
                           dvMaterializeRatio: Double = 0.3): Int = {
-    val v = latest(path)
+    val v = latestVersion(path).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
     val entries = manifestEntries(path, v)
     val small = entries.filter(_.bytes < minFileBytes).map(_.name).toSet
     val dvHeavy = entries.filter(e => e.dv.isDefined && e.phys > 0 &&
@@ -1925,7 +2039,8 @@ object VersionedTable {
     * table commits in O(delta). */
   def upsert(spark: SparkSession, path: String, updates: DataFrame,
              keys: Seq[String], operation: String = "MERGE"): Int = {
-    val v = latest(path)
+    val v = latestVersion(path).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
     val schema = schemaOf(path, v)
     val props = propsOf(path, v)
     // materialize the update source once (lazy localCheckpoint,
@@ -1948,7 +2063,8 @@ object VersionedTable {
   def deleteMatching(spark: SparkSession, path: String, keys: DataFrame,
                      keyCols: Seq[String],
                      operation: String = "DELETE[KEYS]"): Int = {
-    val v = latest(path)
+    val v = latestVersion(path).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
     val schema = schemaOf(path, v)
     val props = propsOf(path, v)
     // one materialization of the (possibly expensive) key frame — it
@@ -1971,7 +2087,8 @@ object VersionedTable {
     * different type fails loudly rather than silently coercing. */
   def upsertEvolve(spark: SparkSession, path: String, updates: DataFrame,
                    keys: Seq[String]): Int = {
-    val v = latest(path)
+    val v = latestVersion(path).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
     val schema = schemaOf(path, v)
     val conflicts = schema.flatMap { f =>
       updates.schema.find(_.name == f.name).collect {
@@ -1992,8 +2109,13 @@ object VersionedTable {
     // evolved columns get a physical name; a name that collides with
     // a previously-dropped column's bytes gets a FRESH physical name
     // (the usedPhys tombstone) instead of resurrecting them
-    val p = withNewColumns(props,
-      merged.columns.filterNot(schema.fieldNames.contains), v + 1)
+    var p = props
+    merged.columns.filterNot(schema.fieldNames.contains).foreach { c =>
+      val phys = if (p.usedPhys.contains(c)) s"${c}_v${v + 1}" else c
+      p = p.copy(
+        colmap = if (phys == c) p.colmap else p.colmap + (c -> phys),
+        usedPhys = p.usedPhys + phys)
+    }
     commitRewrite(spark, path, "MERGE[EVOLVE]", merged, touched,
       nullableSchema(merged.schema), v,
       newProps = if (p == props) None else Some(p))
@@ -2018,7 +2140,8 @@ object VersionedTable {
   def upsertLatest(spark: SparkSession, path: String, updates: DataFrame,
                    key: String, orderCol: String, tieBreaker: String,
                    operation: String = "MERGE"): Int = {
-    val v = latest(path)
+    val v = latestVersion(path).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
     val schema = schemaOf(path, v)
     val props = propsOf(path, v)
     // one materialization of the update batch (see upsert)
@@ -2077,7 +2200,8 @@ object VersionedTable {
                                 condFor: DataFrame => Column,
                                 assignments: Seq[(String, DataFrame => Column)])
       : (Int, Long) = {
-    val v = latest(path)
+    val v = latestVersion(path).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
     val schema = schemaOf(path, v)
     val cols = schema.fieldNames.toSeq
     assignments.foreach { case (c, _) =>
@@ -2122,7 +2246,8 @@ object VersionedTable {
     * scan's per-file hit counts, no extra query). */
   private[graft] def deleteCore(spark: SparkSession, path: String,
                                 condFor: DataFrame => Column): (Int, Long) = {
-    val v = latest(path)
+    val v = latestVersion(path).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
     val schema = schemaOf(path, v)
     // SQL DELETE semantics: only rows where the condition is TRUE are
     // removed — a NULL condition keeps the row (plain !cond would
@@ -2186,7 +2311,8 @@ object VersionedTable {
     * Live row counts in the log stay exact. */
   def deleteVectors(spark: SparkSession, path: String,
                     conditionSql: String): Int = {
-    val v = latest(path)
+    val v = latestVersion(path).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
     val schema = schemaOf(path, v)
     val entries = manifestEntries(path, v)
     val hit = coalesce(expr(conditionSql), lit(false))
@@ -2255,7 +2381,8 @@ object VersionedTable {
     * A computed column necessarily rewrites every row. */
   def addColumn(spark: SparkSession, path: String, name: String,
                 exprSql: String): Int = {
-    val v = latest(path)
+    val v = latestVersion(path).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
     val schema = schemaOf(path, v)
     require(!schema.fieldNames.contains(name),
       s"column $name already exists")
@@ -2279,7 +2406,13 @@ object VersionedTable {
     // a new column whose name collides with a previously-dropped
     // column's PHYSICAL bytes gets a fresh physical name — re-linked
     // files must read it as null, never as the dropped column's data
-    val newProps = withNewColumns(propsOf(path, v), Seq(name), v + 1)
+    val props = propsOf(path, v)
+    val phys = if (props.usedPhys.contains(name)) s"${name}_v${v + 1}"
+               else name
+    val newProps = props.copy(
+      colmap = if (phys == name) props.colmap
+               else props.colmap + (name -> phys),
+      usedPhys = props.usedPhys + phys)
     if (foldsToNull)
       commitActions(path, "ADD COLUMN", v, Set.empty, Nil,
         StructType(schema.fields :+
@@ -2579,7 +2712,8 @@ object VersionedTable {
     * column of a 100 TB table costs one log line. */
   def renameColumn(spark: SparkSession, path: String, from: String,
                    to: String): Int = {
-    val v = latest(path)
+    val v = latestVersion(path).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
     val schema = schemaOf(path, v)
     require(schema.fieldNames.contains(from),
       s"column $from not in ${schema.fieldNames.toSeq}")
@@ -2609,7 +2743,8 @@ object VersionedTable {
     * column's PHYSICAL name goes into the usedPhys tombstone set so a
     * later ADD COLUMN of the same name can never resurrect its data. */
   def dropColumn(spark: SparkSession, path: String, name: String): Int = {
-    val v = latest(path)
+    val v = latestVersion(path).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
     val schema = schemaOf(path, v)
     require(schema.fieldNames.contains(name),
       s"column $name not in ${schema.fieldNames.toSeq}")
@@ -2634,7 +2769,8 @@ object VersionedTable {
     * NEW files are validated against it at O(new data) cost. */
   def addConstraint(spark: SparkSession, path: String, name: String,
                     sql: String): Int = {
-    val v = latest(path)
+    val v = latestVersion(path).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
     val props = propsOf(path, v)
     require(!props.constraints.contains(name),
       s"constraint $name already exists on $path")
@@ -2655,7 +2791,8 @@ object VersionedTable {
   def setTableProperties(path: String,
                          kv: Map[String, String]): Int = {
     require(kv.nonEmpty, "no properties given")
-    val v = latest(path)
+    val v = latestVersion(path).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
     val props = propsOf(path, v)
     commitActions(path,
       s"SET TBLPROPERTIES[${kv.keys.toSeq.sorted.mkString(",")}]",
@@ -2665,7 +2802,8 @@ object VersionedTable {
 
   /** `ALTER TABLE UNSET TBLPROPERTIES` — metadata-only. */
   def unsetTableProperty(path: String, key: String): Int = {
-    val v = latest(path)
+    val v = latestVersion(path).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
     val props = propsOf(path, v)
     require(props.tbl.contains(key),
       s"table property $key not set on $path")
@@ -2679,7 +2817,8 @@ object VersionedTable {
 
   /** `ALTER TABLE DROP CONSTRAINT` — metadata-only. */
   def dropConstraint(path: String, name: String): Int = {
-    val v = latest(path)
+    val v = latestVersion(path).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
     val props = propsOf(path, v)
     require(props.constraints.contains(name),
       s"constraint $name not found on $path " +
@@ -2702,7 +2841,11 @@ object VersionedTable {
     * therefore force the scan path. */
   def statsAggMeta(path: String, column: String,
                    asOf: Option[Int] = None): Option[(Long, Double, Double)] = {
-    val v = readableVersion(path, asOf)
+    val v = asOf.orElse(latestVersion(path)).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
+    require(versions(path).contains(v), s"version $v not committed at $path")
+    require(!vacuumedVersions(path).contains(v),
+      s"version $v was vacuumed at $path")
     val pc = propsOf(path, v).phys(column)
     val es = manifestEntries(path, v)
     if (es.nonEmpty && es.forall(e =>
@@ -2721,7 +2864,11 @@ object VersionedTable {
     * (`SELECT count(*)/min/max` without touching data). */
   def statsAgg(spark: SparkSession, path: String, column: String,
                asOf: Option[Int] = None): (Long, Double, Double) = {
-    val v = readableVersion(path, asOf)
+    val v = asOf.orElse(latestVersion(path)).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
+    require(versions(path).contains(v), s"version $v not committed at $path")
+    require(!vacuumedVersions(path).contains(v),
+      s"version $v was vacuumed at $path")
     val props = propsOf(path, v)
     val pc = props.phys(column)
     val es = manifestEntries(path, v)

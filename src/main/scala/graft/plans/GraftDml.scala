@@ -207,7 +207,9 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
   }
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val v = VersionedTable.latest(path)
+    val v = VersionedTable.latestVersion(path).getOrElse(
+      throw new IllegalArgumentException(
+        s"no committed versions at $path"))
     val schema = VersionedTable.schemaOf(path, v)
     val props = VersionedTable.propsOf(path, v)
     val tgt = GraftDml.idMap(targetAttrs)
@@ -302,15 +304,12 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
       // files re-link (commitRewrite with an empty remove set)
       val joinOn = GraftDml.bind(cond, tgt, base)
       val unmatched = src.join(base, joinOn, "left_anti")
-      val inserts = assembleInserts(unmatched, nmActs, schema)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = Observation()
-        VersionedTable.commitRewrite(spark, path, "MERGE",
-          inserts.observe(n, count(lit(1)).as("n")), Set.empty, schema, v)
-        val ins = n.get("n").asInstanceOf[Long]
-        return Seq(Row(ins, 0L, 0L, ins))
-      } finally { inserts.unpersist(); () }
+      val n = Observation()
+      VersionedTable.commitRewrite(spark, path, "MERGE",
+        assembleInserts(unmatched, nmActs, schema)
+          .observe(n, count(lit(1)).as("n")), Set.empty, schema, v)
+      val ins = n.get("n").asInstanceOf[Long]
+      return Seq(Row(ins, 0L, 0L, ins))
     }
 
     // ambiguity guard (Delta semantics): duplicate source key tuples
@@ -356,16 +355,11 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
     val dropIds = -2 +: allActs.collect {
       case (i, DelAct(_)) => i }
     // the metric counts are OBSERVED on the rewrite's own job, so the
-    // full-outer join runs once and no count query runs. The persist
-    // is filled by that same job; it keeps the rewrite at one file per
-    // shuffle partition (a cached plan's output is not coalesced)
+    // full-outer join runs once and no count query runs
     def tally(ids: Seq[Int]) = count(when(
       col("_graft_merge_act").isin(ids.map(Integer.valueOf): _*), lit(1)))
     val metrics = Observation()
-    val acted = joined.withColumn("_graft_merge_act", act)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    val kept = acted
+    val kept = joined.withColumn("_graft_merge_act", act)
       .observe(metrics,
         tally(allActs.collect { case (i, UpdAct(_, _)) => i }).as("upd"),
         tally(allActs.collect { case (i, DelAct(_)) => i }).as("del"),
@@ -387,14 +381,20 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
           when(col("_graft_merge_act") === i, c).otherwise(els))
       }.as(f.name)
     }
-    val merged = kept.select(outCols: _*)
+    // the rewrite's file layout, stated explicitly: hash-partitioned
+    // on the merge keys into the shuffle partition count, as the
+    // full-outer join partitions its rows — adaptive execution would
+    // otherwise coalesce the join's partitions into fewer files cut
+    // by byte size
+    val merged = kept.select(outCols: _*).repartition(
+      org.apache.spark.sql.internal.SQLConf.get.numShufflePartitions,
+      keys.map(col): _*)
     VersionedTable.commitRewrite(spark, path, "MERGE", merged, touched,
       schema, v)
     val m = metrics.get
     val Seq(nUpd, nDel, nIns) =
       Seq("upd", "del", "ins").map(m(_).asInstanceOf[Long])
     Seq(Row(nUpd + nDel + nIns, nUpd, nDel, nIns))
-    } finally { acted.unpersist(); () }
   }
 
   /** NOT MATCHED insert rows: first clause whose condition holds

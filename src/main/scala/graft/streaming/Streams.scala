@@ -66,19 +66,6 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .start()
 
-  /** [[foreachBatchRun]] over [[fileIngest]] of `srcPath`, projected to
-    * `cols` (default: the schema's columns, without the ingest
-    * lineage columns). */
-  private def ingestRun(spark: SparkSession, srcPath: String,
-                        schema: StructType, checkpoint: String,
-                        maxFilesPerTrigger: Int, cols: Seq[String] = Nil,
-                        format: String = "json")
-                       (fn: (DataFrame, Long) => Unit): StreamingQuery =
-    foreachBatchRun(fileIngest(spark, srcPath, schema, format,
-        maxFilesPerTrigger)
-      .select((if (cols.isEmpty) schema.fieldNames.toSeq else cols)
-        .map(col): _*), checkpoint)(fn)
-
   /** The AvailableNow append-mode lifecycle for a built-in sink: `w`
     * names the sink (parquet path, memory table, graft table), the
     * offsets live in `checkpoint`. */
@@ -89,45 +76,61 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .start()
 
-  /** True when batch `batchId` of `stream` already committed into
-    * `tablePath` under the `verb` marker (`verb[batch=N,stream=S]`).
-    * The marker names its stream, so a second stream into the same
-    * table, or a restart with a fresh checkpoint, never mistakes
-    * another stream's batch N for its own. The log is read newest
-    * first and the scan stops at this stream's latest batch at or
-    * below `batchId`: a stream commits its batches in order, so an
-    * older one means batch N has not landed. An unnamed caller
-    * (`stream` empty) matches batch N of any stream. */
+  /** The identity a stream's exactly-once markers carry: its
+    * checkpoint path plus the id Structured Streaming writes into the
+    * checkpoint's `metadata` file at the first start (empty before).
+    * The id survives restarts from the checkpoint; a checkpoint
+    * deleted and recreated at the same path gets a new one, so it is
+    * a new stream whose batch 0 must land. */
+  private def streamIdentity(spark: SparkSession,
+                             checkpoint: String): String = {
+    val meta = new org.apache.hadoop.fs.Path(checkpoint, "metadata")
+    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val id =
+      if (!fs.exists(meta)) ""
+      else {
+        val in = fs.open(meta)
+        try new com.fasterxml.jackson.databind.ObjectMapper()
+          .readTree(in).get("id").asText
+        finally in.close()
+      }
+    s"$checkpoint,id=$id"
+  }
+
+  /** True when batch `batchId` of the stream with identity `stream`
+    * already committed into `tablePath` under the `verb` marker
+    * (`verb[batch=N,stream=S]`). The marker names its stream, so a
+    * second stream into the same table never mistakes another
+    * stream's batch N for its own. The log is read newest first and
+    * the scan stops at this stream's latest batch at or below
+    * `batchId`: a stream commits its batches in order, so an older
+    * one means batch N has not landed. */
   private def batchCommitted(tablePath: String, verb: String,
                              stream: String, batchId: Long): Boolean = {
     import graft.operators.VersionedTable
     val marker = (java.util.regex.Pattern.quote(verb) +
-      """\[batch=(\d+)(?:,stream=(.*))?\]""").r
+      """\[batch=(\d+),stream=(.*)\]""").r
     VersionedTable.operationsNewestFirst(tablePath).collectFirst {
-      case marker(b, _) if stream.isEmpty && b.toLong == batchId => true
       case marker(b, s) if s == stream && b.toLong <= batchId =>
         b.toLong == batchId
     }.getOrElse(false)
   }
-
-  private def batchMarker(verb: String, stream: String, batchId: Long) =
-    if (stream.isEmpty) s"$verb[batch=$batchId]"
-    else s"$verb[batch=$batchId,stream=$stream]"
 
   /** One micro-batch of the streaming MERGE sink: recency-aware upsert
     * of the batch into the versioned table, exactly-once via a
     * (stream, batch-id) marker in the commit log — a retried batch of
     * the same stream is a no-op, so Structured Streaming's
     * at-least-once `foreachBatch` delivery becomes an exactly-once
-    * table. `stream` names the stream (its checkpoint; see
-    * [[batchCommitted]]). First batch bootstraps the table. Public so
-    * specs can drive retry semantics directly. */
+    * table. `checkpoint` names the stream (see [[streamIdentity]]).
+    * First batch bootstraps the table. Public so specs can drive
+    * retry semantics directly. */
   def mergeBatch(spark: SparkSession, tablePath: String, key: String,
-                 orderCol: String, tieBreaker: String, stream: String = "")
+                 orderCol: String, tieBreaker: String, checkpoint: String)
                 (batch: DataFrame, batchId: Long): Unit = {
     import graft.operators.{Medallion, VersionedTable}
+    val stream = streamIdentity(spark, checkpoint)
+    val marker = s"STREAM_MERGE[batch=$batchId,stream=$stream]"
     if (!batchCommitted(tablePath, "STREAM_MERGE", stream, batchId)) {
-      val marker = batchMarker("STREAM_MERGE", stream, batchId)
       val deduped = Medallion.dedupLatest(batch, key, orderCol, tieBreaker)
       if (VersionedTable.versions(tablePath).isEmpty)
         VersionedTable.write(deduped, tablePath, operation = marker)
@@ -151,8 +154,11 @@ object Streams {
                   tieBreaker: String, checkpoint: String,
                   payloadCols: Seq[String],
                   maxFilesPerTrigger: Int = 32): StreamingQuery =
-    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger, payloadCols)(
-      mergeBatch(spark, tablePath, key, orderCol, tieBreaker, checkpoint))
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
+        maxFilesPerTrigger = maxFilesPerTrigger)
+      .select(payloadCols.map(col): _*), checkpoint)(
+      mergeBatch(spark, tablePath, key, orderCol, tieBreaker,
+        checkpoint))
 
   /** One micro-batch of the streaming APPEND sink (r10): the batch's
     * rows commit as NEW pool files while the whole current manifest
@@ -160,11 +166,13 @@ object Streams {
     * priced every append at O(table). Exactly-once via the (stream,
     * batch-id) commit marker, as in [[mergeBatch]]. Public so specs
     * can drive retry semantics directly. */
-  def appendBatch(spark: SparkSession, tablePath: String, stream: String = "")
+  def appendBatch(spark: SparkSession, tablePath: String,
+                  checkpoint: String)
                  (batch: DataFrame, batchId: Long): Unit = {
     import graft.operators.VersionedTable
+    val stream = streamIdentity(spark, checkpoint)
+    val marker = s"STREAM_APPEND[batch=$batchId,stream=$stream]"
     if (!batchCommitted(tablePath, "STREAM_APPEND", stream, batchId)) {
-      val marker = batchMarker("STREAM_APPEND", stream, batchId)
       if (VersionedTable.versions(tablePath).isEmpty)
         VersionedTable.write(batch, tablePath, operation = marker)
       else
@@ -187,7 +195,9 @@ object Streams {
                    checkpoint: String, payloadCols: Seq[String],
                    maxFilesPerTrigger: Int = 32)
       : StreamingQuery =
-    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger, payloadCols)(
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
+      maxFilesPerTrigger = maxFilesPerTrigger)
+      .select(payloadCols.map(col): _*), checkpoint)(
       appendBatch(spark, tablePath, checkpoint))
 
   /** One trigger of the CDF STREAMING CONSUMER: apply every source
@@ -494,7 +504,9 @@ object Streams {
                          shingleK: Int = 3, numPerm: Int = 64,
                          bands: Int = 16, threshold: Double = 0.5,
                          maxFilesPerTrigger: Int = 2): StreamingQuery =
-    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger, Seq("doc_id", "text"))(
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
+      maxFilesPerTrigger = maxFilesPerTrigger)
+      .select("doc_id", "text"), checkpoint)(
       dedupIndexBatch(indexDir, pairsDir, shingleK, numPerm, bands,
         threshold))
 
@@ -527,7 +539,9 @@ object Streams {
                      outDir: String, checkpoint: String,
                      nprobe: Int = 4, k: Int = 5,
                      maxFilesPerTrigger: Int = 2): StreamingQuery =
-    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger, Seq("vec_id", "embedding"), format = "parquet")(
+    foreachBatchRun(fileIngest(spark, srcPath, schema, format = "parquet",
+      maxFilesPerTrigger = maxFilesPerTrigger)
+      .select("vec_id", "embedding"), checkpoint)(
       annProbeBatch(indexPath, outDir, nprobe, k))
 
   /** One micro-batch of the streaming anomaly monitor's count store:
@@ -553,7 +567,9 @@ object Streams {
                         checkpoint: String,
                         maxFilesPerTrigger: Int = 3)
       : StreamingQuery =
-    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger, Seq("event_type", "ts"))(
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
+      maxFilesPerTrigger = maxFilesPerTrigger)
+      .select("event_type", "ts"), checkpoint)(
       hourlyCountBatch(outDir))
 
   /** The trailing-window z-score monitor re-derived from the merged
@@ -639,9 +655,12 @@ object Streams {
                        rightCols: Seq[String],
                        maxFilesPerTrigger: Int = 3)
       : StreamingQuery =
-    // payload only — fileIngest's source_file bookkeeping column
-    // must not leak into the enriched output
-    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger)(
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
+      maxFilesPerTrigger = maxFilesPerTrigger)
+      // payload only — fileIngest's source_file bookkeeping column
+      // must not leak into the enriched output
+      .select(schema.fieldNames.toIndexedSeq.map(
+        org.apache.spark.sql.functions.col): _*), checkpoint)(
       asofEnrichBatch(right, key, tsCol, rightCols, outDir))
 
   /** Continuous corpus curation: document micro-batches pass the
@@ -707,7 +726,9 @@ object Streams {
                        schema: StructType, countsDir: String,
                        checkpoint: String,
                        maxFilesPerTrigger: Int = 2): StreamingQuery =
-    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger, Seq("text"))(
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
+      maxFilesPerTrigger = maxFilesPerTrigger)
+      .select("text"), checkpoint)(
       tokenCountBatch(countsDir))
 
   /** Point-in-time heavy hitters over the accumulated count shards:
@@ -751,7 +772,9 @@ object Streams {
                 schema: StructType, cellsDir: String,
                 checkpoint: String,
                 maxFilesPerTrigger: Int = 2): StreamingQuery =
-    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger, Seq("lang", "source"))(
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
+      maxFilesPerTrigger = maxFilesPerTrigger)
+      .select("lang", "source"), checkpoint)(
       mixCellsBatch(cellsDir))
 
   /** Point-in-time mix drift of the accumulated incoming shards vs a
@@ -787,8 +810,10 @@ object Streams {
                     schema: StructType, profDir: String,
                     checkpoint: String,
                     maxFilesPerTrigger: Int = 2): StreamingQuery =
-    // profile the DATA columns, not the ingest lineage decoration
-    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger)(
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
+      maxFilesPerTrigger = maxFilesPerTrigger)
+      // profile the DATA columns, not the ingest lineage decoration
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
       profileBatch(profDir))
 
   /** Point-in-time table profile from the accumulated shards. */
@@ -815,7 +840,9 @@ object Streams {
                     schema: StructType, momDir: String, groupCol: String,
                     checkpoint: String,
                     maxFilesPerTrigger: Int = 2): StreamingQuery =
-    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger)(
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
+      maxFilesPerTrigger = maxFilesPerTrigger)
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
       momentsBatch(momDir, groupCol))
 
   /** Point-in-time grouped moment statistics from the accumulated
@@ -853,7 +880,9 @@ object Streams {
                  schema: StructType, sigDir: String, k: Int,
                  checkpoint: String,
                  maxFilesPerTrigger: Int = 2): StreamingQuery =
-    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger)(
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
+      maxFilesPerTrigger = maxFilesPerTrigger)
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
       kminBatch(sigDir, k))
 
   /** Point-in-time pairwise overlap estimates from the accumulated
@@ -948,7 +977,9 @@ object Streams {
                        maxFilesPerTrigger: Int = 2): StreamingQuery =
     // parquet staging: float vectors roundtrip bit-exactly (json
     // would re-parse decimal strings)
-    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger, format = "parquet")(
+    foreachBatchRun(fileIngest(spark, srcPath, schema, format = "parquet",
+      maxFilesPerTrigger = maxFilesPerTrigger)
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
       covarianceBatch(covDir))
 
   /** Point-in-time covariance from the accumulated moment shards —
@@ -983,7 +1014,9 @@ object Streams {
                          exps: Seq[graft.operators.Expectation],
                          checkpoint: String,
                          maxFilesPerTrigger: Int = 2): StreamingQuery =
-    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger)(
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
+      maxFilesPerTrigger = maxFilesPerTrigger)
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
       expectationsBatch(metDir, exps))
 
   /** Point-in-time expectation counters from the accumulated shards —
@@ -1019,7 +1052,9 @@ object Streams {
                      schema: StructType, dir: String, checkpoint: String,
                      width: Int, depth: Int, probes: Seq[String],
                      maxFilesPerTrigger: Int = 2): StreamingQuery =
-    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger)(
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
+      maxFilesPerTrigger = maxFilesPerTrigger)
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
       countMinBatch(dir, width, depth, probes))
 
   /** Point-in-time probe readout from the accumulated CMS shards —
@@ -1065,7 +1100,9 @@ object Streams {
                          rels: Seq[(String, String, DataFrame, String)],
                          checkpoint: String,
                          maxFilesPerTrigger: Int = 2): StreamingQuery =
-    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger)(
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
+      maxFilesPerTrigger = maxFilesPerTrigger)
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
       refIntegrityBatch(riDir, rels))
 
   /** Point-in-time orphan counters from the accumulated shards —
@@ -1106,7 +1143,9 @@ object Streams {
                  schema: StructType, histDir: String, groupCol: String,
                  valueCol: String, width: Double, checkpoint: String,
                  maxFilesPerTrigger: Int = 2): StreamingQuery =
-    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger)(
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
+      maxFilesPerTrigger = maxFilesPerTrigger)
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
       histBatch(histDir, groupCol, valueCol, width))
 
   /** Point-in-time quantile brackets from the accumulated histogram
@@ -1139,7 +1178,9 @@ object Streams {
                         schema: StructType, fpDir: String,
                         checkpoint: String,
                         maxFilesPerTrigger: Int = 2): StreamingQuery =
-    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger)(
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
+      maxFilesPerTrigger = maxFilesPerTrigger)
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
       fingerprintBatch(fpDir))
 
   /** Point-in-time fingerprint from the accumulated shards —
@@ -1173,7 +1214,9 @@ object Streams {
                  schema: StructType, massDir: String,
                  checkpoint: String,
                  maxFilesPerTrigger: Int = 2): StreamingQuery =
-    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger)(
+    foreachBatchRun(fileIngest(spark, srcPath, schema,
+      maxFilesPerTrigger = maxFilesPerTrigger)
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*), checkpoint)(
       massBatch(massDir))
 
   /** Point-in-time waterfilling fit from the accumulated mass
@@ -1216,7 +1259,9 @@ object Streams {
                       schema: StructType, cents: Array[Array[Double]],
                       countsDir: String, checkpoint: String,
                       maxFilesPerTrigger: Int = 2): StreamingQuery =
-    ingestRun(spark, srcPath, schema, checkpoint, maxFilesPerTrigger, Seq("vec_id", "embedding"), format = "parquet")(
+    foreachBatchRun(fileIngest(spark, srcPath, schema, format = "parquet",
+      maxFilesPerTrigger = maxFilesPerTrigger)
+      .select("vec_id", "embedding"), checkpoint)(
       cellCountBatch(cents, countsDir))
 
   /** Point-in-time index health from the accumulated count shards. */

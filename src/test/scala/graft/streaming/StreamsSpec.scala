@@ -303,7 +303,7 @@ class StreamsSpec extends SparkSpec {
     // changes nothing (exactly-once via the commit-log marker)
     val before = graft.operators.VersionedTable.versions(table)
     graft.streaming.Streams.mergeBatch(spark, table, "user_id", "ts",
-      "event_id")(ev.limit(5), 0L)
+      "event_id", ckpt)(ev.limit(5), 0L)
     assert(graft.operators.VersionedTable.versions(table) == before)
   }
 
@@ -339,7 +339,7 @@ class StreamsSpec extends SparkSpec {
     Seq(merged -> "mck", appended -> "ack").foreach { case (t, ck) =>
       val ops = VersionedTable.operations(t)
       Seq(0, 1).foreach(i =>
-        assert(ops.exists(_.endsWith(s",stream=$dir/$ck$i]")), ops))
+        assert(ops.exists(_.contains(s",stream=$dir/$ck$i,id=")), ops))
     }
     // a retried batch of either stream changes nothing
     val (mv, av) = (VersionedTable.versions(merged),
@@ -354,6 +354,35 @@ class StreamsSpec extends SparkSpec {
     // a third, fresh stream's batch 0 does land
     Streams.appendBatch(spark, appended, s"$dir/ack2")(ev.limit(5), 0L)
     assert(VersionedTable.read(spark, appended).count() == ev.count() + 5)
+  }
+
+  test("a checkpoint deleted and recreated at the same path is a new " +
+    "stream: its batches land below the old stream's markers") {
+    import graft.operators.VersionedTable
+    val dir = Files.createTempDirectory("graft_ckpt_reset").toString
+    val (table, ckpt) = (s"$dir/t", s"$dir/ckpt")
+    val schema = StructType(Seq(StructField("event_id", LongType),
+      StructField("ts", LongType), StructField("user_id", LongType)))
+    val cols = Seq("event_id", "ts", "user_id")
+    val ev = tables.events.select(cols.map(col): _*)
+    val halves = Seq(0, 1).map(r => ev.filter(col("event_id") % 2 === r))
+    def run(i: Int): Unit = {
+      halves(i).repartition(2).write.mode("overwrite").json(s"$dir/src$i")
+      Streams.awaitDone(Streams.appendStream(spark, s"$dir/src$i", schema,
+        table, ckpt, payloadCols = cols, maxFilesPerTrigger = 1), 60000)
+    }
+    run(0)
+    // the first stream committed batches 0 and 1
+    assert(VersionedTable.operations(table).size == 2)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
+    run(1)
+    // the recreated checkpoint's batches 0 and 1 landed too
+    val got = VersionedTable.read(spark, table)
+    assert(got.count() == ev.count() && got.exceptAll(ev).count() == 0)
+    // and a retry of its batch 0 is still a no-op
+    val before = VersionedTable.versions(table)
+    Streams.appendBatch(spark, table, ckpt)(ev.limit(3), 0L)
+    assert(VersionedTable.versions(table) == before)
   }
 
   test("appendStream: append-only bronze lifecycle — O(batch) commits " +
@@ -386,7 +415,7 @@ class StreamsSpec extends SparkSpec {
     assert(got.exceptAll(ev).count() == 0)
     // retry: re-delivering a committed batch id is a no-op
     val before = graft.operators.VersionedTable.versions(table)
-    Streams.appendBatch(spark, table)(ev.limit(3), 0L)
+    Streams.appendBatch(spark, table, ckpt)(ev.limit(3), 0L)
     assert(graft.operators.VersionedTable.versions(table) == before)
   }
 
